@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import graft.operators.{DedupConfig, DedupPipeline}
@@ -171,10 +172,16 @@ object Bench {
                        cpuCoreSec: Double, gcSec: Double,
                        readMb: Double, shuffleMb: Double,
                        stealSec: Double, sysSec: Double,
-                       aborted: Boolean = false) {
+                       aborted: Boolean = false, codegenCompiles: Long = 0L) {
     def json: String =
-      f"""{"cpus":$cpus,"sec":$sec%.2f,"docs_per_sec":$docsPerSec%.1f,"cpu_core_sec":$cpuCoreSec%.1f,"gc_sec":$gcSec%.1f,"read_mb":$readMb%.1f,"shuffle_mb":$shuffleMb%.1f,"host_steal_sec":$stealSec%.1f,"host_sys_sec":$sysSec%.1f,"aborted":$aborted}"""
+      f"""{"cpus":$cpus,"sec":$sec%.2f,"docs_per_sec":$docsPerSec%.1f,"cpu_core_sec":$cpuCoreSec%.1f,"gc_sec":$gcSec%.1f,"read_mb":$readMb%.1f,"shuffle_mb":$shuffleMb%.1f,"host_steal_sec":$stealSec%.1f,"host_sys_sec":$sysSec%.1f,"aborted":$aborted,"codegen_compiles":$codegenCompiles}"""
   }
+
+  /** Classes Spark's code generator has compiled in this JVM so far; the
+    * delta over a call is the code that call did not find in the cache.
+    */
+  private def codegenCompiles(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** (user+nice, system, steal) CPU seconds from /proc/stat — hypervisor
     * steal during a run is the direct evidence of a throttling window.
@@ -226,15 +233,17 @@ object Bench {
         pages.count() // materialize input outside the timed section
         agg.cpuNs.set(0); agg.gcMs.set(0); agg.readB.set(0)
         agg.shufRB.set(0); agg.shufWB.set(0)
+        val c0 = codegenCompiles()
         val t0 = System.nanoTime()
         val n = DedupPipeline.run(spark, pages, DedupConfig()).count()
         val sec = (System.nanoTime() - t0) / 1e9
+        val compiles = codegenCompiles() - c0
         val h1 = hostCpu()
         Thread.sleep(500) // let the async listener bus drain the last taskEnds
         val run = Run(cpus, sec, nDocs / sec, agg.cpuNs.get / 1e9,
           agg.gcMs.get / 1e3, agg.readB.get / 1e6,
           (agg.shufRB.get + agg.shufWB.get) / 1e6,
-          h1._3 - h0._3, h1._2 - h0._2)
+          h1._3 - h0._3, h1._2 - h0._2, codegenCompiles = compiles)
         System.err.println(f"[bench] cpus=$cpus%2d sec=$sec%8.2f docs_per_sec=${nDocs / sec}%9.1f cpu=${run.cpuCoreSec}%7.1f gc=${run.gcSec}%5.1f shuf_mb=${run.shuffleMb}%8.1f steal=${run.stealSec}%5.1f sys=${run.sysSec}%6.1f out=$n")
         pages.unpersist()
         run

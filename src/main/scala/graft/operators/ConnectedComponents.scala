@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -57,6 +58,8 @@ object ConnectedComponents {
     var labels = vertices.select(col("id"), col("id").as("component"))
     var iter = 0
     var converged = false
+    // the newest checkpoint, whose blocks the next round reads; freed once
+    // that round has materialized its own (the hop-1 labels in round 1)
     var prevChk: DataFrame = null
     while (!converged && iter < maxIterations) {
       // Convergence check rides the round job itself (round-6 barrier cut):
@@ -110,10 +113,11 @@ object ConnectedComponents {
       val base =
         if (iter == 0) {
           spark.sparkContext.setJobDescription("cc: round 1 hop-1 labels")
-          sym.select(col("dst").as("id"), col("src").as("component"))
+          prevChk = sym.select(col("dst").as("id"), col("src").as("component"))
             .union(labels)
             .groupBy("id").agg(min(col("component")).as("component"))
             .localCheckpoint(eager = true)
+          prevChk
         } else labels
       val msgs = sym
         .join(base, sym("src") === base("id"))
@@ -137,7 +141,7 @@ object ConnectedComponents {
         .localCheckpoint(eager = true) // the round; check rides along free
       val t1 = System.nanoTime()
       val changed = changedAcc.value > 0
-      if (prevChk != null) prevChk.unpersist()
+      freeCheckpoint(prevChk)
       prevChk = next
       labels = next.select(col("id"), col("component"))
       converged = !changed
@@ -147,4 +151,12 @@ object ConnectedComponents {
     sym.unpersist()
     labels
   }
+
+  /** Drops the blocks of a `localCheckpoint`ed frame. They belong to the
+    * checkpointed RDD under its `LogicalRDD`, not to the `CacheManager`, so
+    * `Dataset.unpersist` would leave them in place.
+    */
+  private def freeCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 }

@@ -333,6 +333,8 @@ object DedupPipeline {
     * returns only groups of >= 2.
     */
   def run(spark: SparkSession, pages: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
+    // the stages label their jobs; the caller's label is restored on exit
+    val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
     val projected = pages.select(col("url"), col("warc_ts"), col("text"))
 
     // ---- stage 0: exact pre-collapse ---------------------------------
@@ -425,6 +427,7 @@ object DedupPipeline {
         membersPart.unpersist()
       }
       if (keyed != null) keyed.unpersist()
+      spark.sparkContext.setJobDescription(callerDescription)
     }
   }
 

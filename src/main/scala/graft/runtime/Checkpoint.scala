@@ -553,6 +553,10 @@ object Checkpoint {
     require(maxParallelDays == 1 || failAfter == Int.MaxValue,
       "failAfter crash injection is defined for sequential drains only")
     val cfgHash = configHash(cfg)
+    val sc = spark.sparkContext
+    // each day's jobs are labelled `checkpoint: <day>`; the caller's label is
+    // restored on exit (the sequential drain runs on the caller's thread)
+    val callerDescription = sc.getLocalProperty("spark.job.description")
     val runId =
       if (lockTtlMs > 0) acquireLock(spark, root, cfgHash, lockTtlMs) else ""
     // day-lease workers need an identity even without the global lock
@@ -581,6 +585,7 @@ object Checkpoint {
         val leased = dayLeaseTtlMs <= 0 ||
           tryAcquireDayLease(root, cfgHash, day, workerId, dayLeaseTtlMs)
         val t0 = System.currentTimeMillis()
+        sc.setJobDescription(s"checkpoint: $day")
         val completed = if (!leased) false else try {
           if (failDays.contains(day))
             throw new RuntimeException(s"injected day failure for $day")
@@ -662,6 +667,6 @@ object Checkpoint {
         if (runId.nonEmpty)
           releaseLock(spark, root, cfgHash, runId, "FAILED", String.valueOf(e.getMessage))
         throw e
-    }
+    } finally sc.setJobDescription(callerDescription)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{BlockDedup, DedupConfig, SkewOps}
@@ -20,25 +21,60 @@ class Round4Spec extends AnyFunSuite {
 
   // ---------------------------------------------- day-parallel incremental
 
-  test("day-parallel runIncremental: identical checkpoints/outputs, faster wall") {
+  /** Per day, the interval from the start of its first `checkpoint: <day>`
+    * job to the end of its last: `Checkpoint.runIncremental` labels a
+    * day's first job (the input count) and its last (the checkpoint row)
+    * so, and the pipeline jobs in between run inside that span.
+    */
+  private def daySpans(body: => Unit): Map[String, (Long, Long)] = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val desc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => desc.put(e.jobId, d))
+        starts.put(e.jobId, e.time)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        ends.put(e.jobId, e.time)
+        if (desc.get(e.jobId) == "day-spans: marker") marker.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers events in order: once the marker job's end
+      // arrives, every job of `body` has been recorded
+      sc.setJobDescription("day-spans: marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val day = "checkpoint: (.+)".r
+    desc.asScala.toSeq.collect { case (id, day(d)) => d -> (starts.get(id), ends.get(id)) }
+      .groupBy(_._1).map { case (d, js) => d -> (js.map(_._2._1).min, js.map(_._2._2).max) }
+  }
+
+  private def overlapping(spans: Map[String, (Long, Long)]): Seq[(String, String)] =
+    spans.toSeq.combinations(2).collect {
+      case Seq((a, (s1, e1)), (b, (s2, e2))) if s1 < e2 && s2 < e1 => (a, b)
+    }.toSeq
+
+  test("day-parallel runIncremental: identical outputs, days' jobs overlap") {
     val pages = PagesGen.generate(spark, 600, nDomains = 20, nDays = 6, seed = 7L)
     val rootSeq = freshRoot()
     val rootPar = freshRoot()
-    val rootWarm = freshRoot()
     val h = Checkpoint.configHash(DedupConfig())
 
-    // JIT/codegen warmup outside both timed runs (one day only)
-    val firstDay = pages.select(graft.functions.Fns.dayKey(col("warc_ts")).as("d"))
-      .agg(min(col("d"))).first().getString(0)
-    Checkpoint.runIncremental(spark,
-      pages.filter(graft.functions.Fns.dayKey(col("warc_ts")) === firstDay), rootWarm)
-
-    val t0 = System.nanoTime()
-    val a = Checkpoint.runIncremental(spark, pages, rootSeq)
-    val tSeq = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val b = Checkpoint.runIncremental(spark, pages, rootPar, maxParallelDays = 4)
-    val tPar = (System.nanoTime() - t1) / 1e9
+    var a, b: Seq[String] = Nil
+    val seqSpans = daySpans { a = Checkpoint.runIncremental(spark, pages, rootSeq) }
+    val parSpans = daySpans {
+      b = Checkpoint.runIncremental(spark, pages, rootPar, maxParallelDays = 4)
+    }
 
     assert(a.size == 6 && a.toSet == b.toSet)
     assert(Checkpoint.completedDays(spark, rootSeq, h) ==
@@ -50,9 +86,11 @@ class Round4Spec extends AnyFunSuite {
         .orderBy("url").collect().map(_.toString).toSeq
       assert(x == y, s"day $d outputs differ between sequential and parallel")
     }
-    info(f"sequential $tSeq%.1f s, parallel(4) $tPar%.1f s")
-    assert(tPar < tSeq,
-      f"parallel drain ($tPar%.1f s) not faster than sequential ($tSeq%.1f s)")
+    // every day is seen in both drains; the sequential one never has two
+    // days in flight, the parallel one does
+    assert(seqSpans.keySet == a.toSet && parSpans.keySet == a.toSet)
+    assert(overlapping(seqSpans).isEmpty, s"sequential days overlap: $seqSpans")
+    assert(overlapping(parSpans).nonEmpty, s"no two days' jobs overlap: $parSpans")
   }
 
   test("two concurrent drivers, each day-parallel, still drain disjoint days") {

@@ -89,6 +89,21 @@ class Round6Spec extends AnyFunSuite {
       Map(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
+  test("CC frees each superseded round's checkpoint: only the returned " +
+    "labels stay pinned") {
+    import spark.implicits._
+    // a path needs several rounds, each with its own checkpoint
+    val e = (1L until 17L).map(i => (i, i + 1)).toDF("src", "dst")
+    val v = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val labels = ConnectedComponents.run(spark, v, e)
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.size == 1, s"CC left ${pinned.size} RDDs pinned, expected the labels' only")
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 17L).map(_ -> 1L).toMap)
+  }
+
   test("CC round 1 computes the hop-1 aggregation once (pinned base, no " +
     "duplicated edge-list exchange)") {
     // Mirrors ConnectedComponents round 1's plan shape. With `base` left
