@@ -223,7 +223,7 @@ object Bench {
       spark.sparkContext.addSparkListener(agg)
       val h0 = hostCpu()
       try {
-        // bigCacheLevel (default DISK_ONLY): on-heap corpus text is
+        // bigCacheLevel (DISK_ONLY): on-heap corpus text is
         // eviction bait for the timed run's sorts (see DedupPipeline.run's
         // `keyed` note); scratch is tmpfs here so re-reads are RAM-speed
         // deserialization.

@@ -44,7 +44,7 @@ object BenchDebug {
     val vertices = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
     val comps = timed("cc") {
-      val c = ConnectedComponents.run(spark, vertices, edges, verbose = true)
+      val c = ConnectedComponents.run(spark, vertices, edges)
         .persist(StorageLevel.MEMORY_AND_DISK)
       c.count()
       c

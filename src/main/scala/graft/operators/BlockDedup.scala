@@ -21,9 +21,9 @@ import graft.functions.Fns
   * Scale notes: phase 2's pair generation is an explode-join on shared
   * article ids (a subset pair must share every id of the smaller block, so
   * sharing one id is a complete candidate generator — no all-pairs); phase
-  * 3 reuses the MinHash-LSH candidate machinery over titles. Chain
-  * resolution is pointer-jumping to a fixpoint (strict-subset chains are
-  * acyclic).
+  * 3 reuses the MinHash-LSH candidate machinery over titles. Absorption
+  * chains are resolved on the driver: the absorbed map holds one row per
+  * absorbed block, and strict-subset chains are acyclic.
   */
 object BlockDedup {
 
@@ -62,23 +62,24 @@ object BlockDedup {
       .groupBy(col("i"))
       .agg(min_by(col("j"), struct(col("szj"), col("j"))).as("into"))
 
-    // pointer-jump absorption chains to fixpoint (acyclic: sizes increase)
-    var mapping = phase1.select(col("idx"), col("winner"))
-      .join(absorbed, col("winner") === col("i"), "left")
-      .select(col("idx"), coalesce(col("into"), col("winner")).as("winner"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var guard = 0
-    while (changed > 0 && guard < 20) {
-      val next = mapping.as("m")
-        .join(absorbed.as("a"), col("m.winner") === col("a.i"), "left")
-        .select(col("m.idx"), coalesce(col("a.into"), col("m.winner")).as("winner"))
-        .localCheckpoint(true)
-      changed = next.as("n").join(mapping.as("p"), "idx")
-        .filter(col("n.winner") =!= col("p.winner")).limit(1).count()
-      mapping = next
-      guard += 1
+    // `absorbed` is a forest (sizes strictly increase along i -> into):
+    // resolve every absorbed block's root on the driver, memoized
+    val into = absorbed.select(col("i").cast("long"), col("into").cast("long"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val root = scala.collection.mutable.HashMap.empty[Long, Long]
+    into.keys.foreach { i =>
+      var path = List(i)
+      var r = into(i)
+      while (!root.contains(r) && into.contains(r)) { path = r :: path; r = into(r) }
+      val top = root.getOrElse(r, r)
+      path.foreach(root(_) = top)
     }
+    import spark.implicits._
+    val roots = spark.sparkContext.parallelize(root.toSeq).toDF("i", "root")
+    val mapping = phase1.join(roots, col("winner") === col("i"), "left")
+      .select(col("idx"),
+        coalesce(col("root").cast(blocks.schema("idx").dataType), col("winner")).as("winner"))
+      .localCheckpoint(true)
     keyed.unpersist()
     uniq.unpersist()
     mapping

@@ -33,7 +33,8 @@ import graft.functions.Fns
   *      web-scale df-cap; candidate loss is bounded and measured in tests.
   *   3. candidates are verified with the exact cosine predicate as a
   *      codegen'd column expression (no UDF in the join hot path)
-  *   4. connected components via iterative min-label propagation
+  *   4. connected components: the verified edges are collected in one job
+  *      and finished with an in-memory union-find on the driver
   *   5. >20 split + keeper selection as window functions per component
   *
   * Banding default (128 hashes, 32 bands × 4 rows) puts the LSH S-curve
@@ -126,19 +127,12 @@ object DedupPipeline {
   /** Storage level for the pipeline's corpus-scale caches (`keyed`, `sigs`,
     * the bucket checkpoint — and callers' input persist via this same
     * field). Semantics are placement-independent; only where the bytes sit
-    * changes. Default DISK_ONLY: on-heap corpus text is eviction bait for
+    * changes. DISK_ONLY because on-heap corpus text is eviction bait for
     * the big sort stages (measured convoy: 27/32 task threads parked in
     * `UnifiedMemoryManager.acquireExecutionMemory`, 2M-doc bench) and the
     * scratch dir is tmpfs on the bench box / node-local SSD on a cluster.
-    * `SPARK_GRAFT_CACHE` ∈ {disk, memser, memdisk} overrides for A/B
-    * measurement (ScalingProbe) without a recompile.
     */
-  private[graft] val bigCacheLevel: StorageLevel =
-    sys.env.getOrElse("SPARK_GRAFT_CACHE", "disk").toLowerCase match {
-      case "memdisk" => StorageLevel.MEMORY_AND_DISK
-      case "memser"  => StorageLevel.MEMORY_AND_DISK_SER
-      case _         => StorageLevel.DISK_ONLY
-    }
+  private[graft] val bigCacheLevel: StorageLevel = StorageLevel.DISK_ONLY
 
   /** 128-bit numeric surrogate key for a url. Every downstream join/shuffle
     * (LSH self-join, verify, CC) moves 16 bytes instead of a ~60-byte url
@@ -231,7 +225,7 @@ object DedupPipeline {
       .select(bucketCols: _*)
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
       .repartition(col("band"), col("bucket"))
-      // bigCacheLevel (default DISK_ONLY): ~GBs of bucket rows held on-heap
+      // bigCacheLevel (DISK_ONLY): ~GBs of bucket rows held on-heap
       // are eviction bait for the self-join's sorts (same convoy as
       // `keyed`); tmpfs/SSD re-reads keep the pinned partitioning either way.
       .localCheckpoint(eager = true, bigCacheLevel)
@@ -355,7 +349,7 @@ object DedupPipeline {
         // n_chars is computed MAP-SIDE here so the member-rows plan below
         // never needs the text column: its copy of the join shuffles only
         // (chash, url, warc_ts, n_chars) — ~90 B/row, not the document.
-        // bigCacheLevel (default DISK_ONLY), deliberately: this is the full
+        // bigCacheLevel (DISK_ONLY), deliberately: this is the full
         // corpus INCLUDING text — the pipeline's biggest cache. Held
         // on-heap (MEMORY_AND_DISK) it fills the unified pool's storage
         // side, and the big sort stages' execution requests then evict it
@@ -472,18 +466,11 @@ object DedupPipeline {
       .persist(bigCacheLevel)
     onSigs(sigs)
     val cand = candidates(sigs, cfg)
-    // Edge list materialized via eager localCheckpoint, NOT persist+count
-    // (round-6): persisted plans bypass AQE partition coalescing
-    // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning defaults
-    // false), so the old cache kept the verify join's 128 output partitions
-    // no matter how few edges there were — and CC then scanned it 4x per
-    // round-1 leg as 256-512 near-empty tasks (measured: the 3k-doc oracle
-    // fixture spent 5-22 s per CC round in pure task-launch overhead, the
-    // dominant cost of p_dedup_clusters). A localCheckpoint runs through
-    // AQE, so the edge list lands in data-sized partitions at ANY scale
-    // (~4 at 3k docs, ~a few dozen at 2M); blocks are freed by the
-    // ContextCleaner when the frame goes out of scope, same as the bucket
-    // checkpoint.
+    // Edge list materialized once by an eager localCheckpoint: CC scans it
+    // three times (edges + both vertex columns). Unlike persist(), a
+    // checkpoint runs through AQE, so it lands in data-sized partitions
+    // instead of the verify join's 128 (cached plans bypass coalescing).
+    // The ContextCleaner frees its blocks once the frame goes out of scope.
     sc.setJobDescription("dedup: verify edges materialize")
     val edges = verifiedEdges(sigs, cand, cfg)
       .select(col("uid_a").as("src"), col("uid_b").as("dst"))
@@ -492,14 +479,12 @@ object DedupPipeline {
     // Only vertices that appear in at least one edge can be in a >=2
     // component; everything else is a singleton and drops out — keeps the
     // CC working set at the number of *duplicated* docs, not corpus size.
-    // No distinct(): CC's round-1 aggregation dedups for free (its join
-    // rounds only ever see groupBy outputs), so a distinct here would be
-    // one full extra edge-list exchange of pure overhead.
+    // No distinct(): CC interns ids on the driver, so a distinct here would
+    // be one full extra edge-list exchange of pure overhead.
     val vertices = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
 
-    val comps = ConnectedComponents.run(spark, vertices, edges,
-      verbose = sys.env.get("SPARK_GRAFT_CC_VERBOSE").contains("1"))
+    val comps = ConnectedComponents.run(spark, vertices, edges)
 
     // ---- fan exact-dup members back in --------------------------------
     // component(row) = CC component of its representative, or the rep uid

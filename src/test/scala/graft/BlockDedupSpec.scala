@@ -127,4 +127,14 @@ class BlockDedupSpec extends AnyFunSuite {
       assert(gotS == wantS, s"round $round sections:\n got=$gotS\nwant=$wantS")
     }
   }
+
+  test("BlockDedup resolves a 23-block strict-subset chain to its largest block") {
+    import spark.implicits._
+    // block k holds ids a0..ak, so each block is absorbed by the next one
+    val blocks = (0 until 23).map(k => (k.toLong, s"chain block $k", (0 to k).map(i => s"a$i")))
+      .toDF("idx", "title", "article_ids")
+    val winners = BlockDedup.exactAndSubset(spark, blocks)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(winners == (0L until 23L).map(_ -> 22L).toMap)
+  }
 }

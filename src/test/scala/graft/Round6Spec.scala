@@ -8,7 +8,7 @@ import graft.sources.PagesGen
 
 /** Round-6 optimization regression tests: the 128-bit SimHash pre-gate
   * (results must be invariant — the gate only prunes verify-join noise) and
-  * the accumulator-fused CC convergence check (one job per round).
+  * connected components (labels, key types, nothing left pinned).
   */
 class Round6Spec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
@@ -67,7 +67,7 @@ class Round6Spec extends AnyFunSuite {
     assert(cand.columns.toSeq == Seq("uid_a", "uid_b", "simhash_hamming"))
   }
 
-  // ------------------------------------- CC accumulator convergence check
+  // ------------------------------------------------ connected components
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
@@ -89,60 +89,58 @@ class Round6Spec extends AnyFunSuite {
       Map(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
-  test("CC frees each superseded round's checkpoint: only the returned " +
-    "labels stay pinned") {
+  test("CC pins nothing: no new persistent RDDs after a call") {
     import spark.implicits._
-    // a path needs several rounds, each with its own checkpoint
     val e = (1L until 17L).map(i => (i, i + 1)).toDF("src", "dst")
     val v = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val labels = ConnectedComponents.run(spark, v, e)
-    val pinned = sc.getPersistentRDDs.keySet -- before
-    assert(pinned.size == 1, s"CC left ${pinned.size} RDDs pinned, expected the labels' only")
     assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       (1L to 17L).map(_ -> 1L).toMap)
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.isEmpty, s"CC left ${pinned.size} RDDs pinned")
   }
 
-  test("CC round 1 computes the hop-1 aggregation once (pinned base, no " +
-    "duplicated edge-list exchange)") {
-    // Mirrors ConnectedComponents round 1's plan shape. With `base` left
-    // lazy, AQE does NOT reuse the exchange between its two consumers
-    // (measured: the executed plan carried TWO identical
-    // Exchange+HashAggregate stages over the cached edge list — the full
-    // hop-1 aggregation ran twice, and the cache was scanned 3x). With
-    // the eager localCheckpoint the production code now uses, the fused
-    // round job scans the edge cache exactly ONCE (the message join);
-    // hop-1 labels come from the pinned RDD.
+  test("CC on struct<h1,h2> keys: component = Spark's min over the struct " +
+    "(negative and tied h1, h2 decides)") {
     import spark.implicits._
-    val e = (1L to 4000L).map(i => (i, i % 997)).toDF("src", "dst")
-    val sym = e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val labels = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id")))
-        .select(col("id"), col("id").as("component"))
-      val base = sym.select(col("dst").as("id"), col("src").as("component"))
-        .union(labels)
-        .groupBy("id").agg(min(col("component")).as("component"))
-        .localCheckpoint(eager = true)
-      val msgs = sym.join(base, sym("src") === base("id"))
-        .select(sym("dst").as("id"), col("component"), lit(false).as("own"))
-      val next = base.select(col("id"), col("component"), lit(true).as("own"))
-        .union(msgs)
-        .groupBy("id")
-        .agg(min(col("component")).as("component"),
-          min(when(col("own"), col("component"))).as("prev_component"))
-      next.collect()
-      // AQE's explain string repeats the plan ("Final Plan" + "Initial
-      // Plan") — count scans in the executed final section only
-      val plan = next.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val cacheScans = "InMemoryTableScan".r.findAllIn(plan).size
-      assert(cacheScans == 1,
-        s"round job must scan the edge cache once, saw $cacheScans:\n$plan")
-    } finally sym.unpersist(): Unit
+    val rnd = new scala.util.Random(11)
+    // few distinct h1 values (negative, tied) so h2 often decides the min
+    val keys = (0 until 60).map(_ => (rnd.nextInt(5) - 3).toLong -> (rnd.nextInt(41) - 20).toLong)
+      .distinct.toIndexedSeq
+    val pairs = (0 until 45).map(_ => (rnd.nextInt(keys.size), rnd.nextInt(keys.size)))
+    // brute-force component number per key index: repeated min-relabelling
+    val comp = Array.tabulate(keys.size)(identity)
+    var changed = true
+    while (changed) {
+      changed = false
+      pairs.foreach { case (a, b) =>
+        val m = math.min(comp(a), comp(b))
+        if (comp(a) != m || comp(b) != m) { comp(a) = m; comp(b) = m; changed = true }
+      }
+    }
+    val key = struct(col("h1"), col("h2"))
+    val byIdx = keys.zipWithIndex.map { case ((h1, h2), i) => (i, h1, h2, comp(i)) }
+      .toDF("i", "h1", "h2", "c").select(col("i"), key.as("k"), col("c"))
+    val expected = byIdx.join(byIdx.groupBy("c").agg(min(col("k")).as("m")), "c")
+      .collect().map(r => r.getStruct(2) -> r.getStruct(3)).toMap
+    val k = byIdx.select(col("i"), col("k"))
+    val e = pairs.toDF("a", "b")
+      .join(k.as("x"), col("a") === col("x.i")).join(k.as("y"), col("b") === col("y.i"))
+      .select(col("x.k").as("src"), col("y.k").as("dst"))
+    val out = ConnectedComponents.run(spark, k.select(col("k").as("id")), e)
+      .collect().map(r => r.getStruct(0) -> r.getStruct(1)).toMap
+    assert(keys.exists(_._1 < 0) && expected.size == keys.size)
+    assert(out == expected)
+  }
+
+  test("CC rejects key types other than bigint and struct<h1,h2>") {
+    import spark.implicits._
+    val e = Seq(("a", "b")).toDF("src", "dst")
+    intercept[IllegalArgumentException] {
+      ConnectedComponents.run(spark, e.select(col("src").as("id")), e)
+    }
   }
 
   test("CC convergence check never declares early convergence on a long " +
