@@ -45,7 +45,7 @@ import graft.sources.PagesGen
   */
 object Bench {
 
-  private def build(cpus: Int, shufParts: Int): SparkSession = {
+  private[graft] def build(cpus: Int, shufParts: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")

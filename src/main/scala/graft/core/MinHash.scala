@@ -61,28 +61,6 @@ object MinHash {
     if (w == all.length) all else java.util.Arrays.copyOf(all, w)
   }
 
-  /** MinHash signature: slot i = unsigned-min over shingles of
-    * `mix64(shingle ^ key_i)`. Empty shingle set -> null (caller filters).
-    */
-  def signature(shingleHashes: Array[Long], numHashes: Int, seed: Long = 42L): Array[Long] = {
-    if (shingleHashes.isEmpty) return null
-    val sig = Array.fill(numHashes)(-1L) // unsigned max
-    var p = 0
-    while (p < numHashes) {
-      val key = mix64(seed + p)
-      var best = -1L
-      var i = 0
-      while (i < shingleHashes.length) {
-        val h = mix64(shingleHashes(i) ^ key)
-        if (java.lang.Long.compareUnsigned(h, best) < 0) best = h
-        i += 1
-      }
-      sig(p) = best
-      p += 1
-    }
-    sig
-  }
-
   /** One-permutation MinHash with rotation densification (Li/Owen/Zhang
     * 2012 — the web-scale variant): hash each shingle ONCE, scatter into m
     * slots by its top bits, keep the unsigned-min per slot, then fill empty

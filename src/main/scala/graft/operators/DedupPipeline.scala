@@ -51,7 +51,7 @@ final case class DedupConfig(
     maxGroupSize: Int = 20,
     seed: Long = 42L,
     /** SimHash hamming pre-gate on LSH candidates, applied before the
-      * expensive embedding join. Evidence (PairMassProbe, 600k-doc corpus):
+      * expensive embedding join. Evidence (`Probe pairmass`, 600k-doc corpus):
       * true-edge (cosine>=0.90) hamming peaks at 6/64 and dies ~2-3x per
       * bit — max observed 21 at 1.3M edges (17 at the 3k oracle fixture) —
       * while NOISE pairs (random hamming ~ N(32,4)) start dominating the
@@ -72,10 +72,10 @@ final case class DedupConfig(
       * true/noise mean separation in noise-sigma units, so at equal recall
       * this gate rejects most of the noise the 64-bit gate at 23 admits —
       * the verify join's pair exchange is the pipeline's largest shuffle
-      * and was majority-noise at gate 23 (round-5 PairMassProbe, 2 M docs).
-      * Evidence for the default (PairMassProbe, 2 M-doc bench corpus,
-      * round 6): the 64-gated verify stream is 15.16 M distinct pairs of
-      * which only 4.37 M are true edges (71 % noise); true-edge hamming128
+      * and was majority-noise at gate 23 (`Probe pairmass`, 2 M docs).
+      * Evidence for the default (`Probe pairmass`, 2 M-doc bench corpus):
+      * the 64-gated verify stream is 15.16 M distinct pairs of which only
+      * 4.37 M are true edges (71 % noise); true-edge hamming128
       * maxes at 36 (35 at 600 k) with the mass dying ~2x per bit (2 edges
       * of 4.37 M at 36), while raw noise above the 35.1 % true plateau is
       * 0.26 M rows at gate 42 vs 10.8 M at 64-bit gate 23 — a ~40x noise
@@ -188,8 +188,8 @@ object DedupPipeline {
     * uid_a, which is exactly the distribution the verify join's first
     * probe (`join ... on uid_a`) needs. Compared to a bare
     * dropDuplicates, this removes one whole pair exchange from the hot
-    * path (StageProbe: the dedup-output→join1 exchange was 280 MB at 600k
-    * docs).
+    * path (per-stage listener: the dedup-output→join1 exchange was 280 MB
+    * at 600k docs).
     */
   def candidates(sigs: DataFrame, cfg: DedupConfig): DataFrame =
     candidatesRaw(sigs, cfg)
@@ -199,7 +199,7 @@ object DedupPipeline {
   /** The band-join pair stream BEFORE cross-band deduplication: one row per
     * (band, bucket) co-occurrence of a pair, hamming-gated. This is exactly
     * what crosses the pair-dedup exchange; exposed for diagnostics
-    * (PairMassProbe measures its volume per gate threshold).
+    * (`Probe pairmass` measures its volume per gate threshold).
     *
     * Plan shape (the zero-extra-exchange bucket stage): the exploded
     * bucket rows are hash-partitioned by (band, bucket) ONCE and pinned
@@ -208,7 +208,7 @@ object DedupPipeline {
     * exchange (partial = final), its hot set broadcasts back for the
     * anti-join, and the LSH self-join sees both sides already partitioned
     * on the join key — no per-side exchange, no duplicated bucket-count
-    * exchange (StageProbe measured both duplicated pre-restructure: 2x698
+    * exchange (the per-stage listener measured both duplicated: 2x698
     * + 2x262 MB at 600k docs; now one 700 MB write). The checkpoint blocks
     * (~50 B/bucket-row) are freed by the ContextCleaner once the run's
     * frames go out of scope.
@@ -248,7 +248,7 @@ object DedupPipeline {
     // it is part of the p_dedup_edges oracle contract. Both gates run
     // INSIDE the band join's projection, before the pair crosses any
     // further exchange; the h128 helper column is dropped pre-shuffle
-    // unless a diagnostics caller (PairMassProbe) asks for it.
+    // unless a diagnostics caller (`Probe pairmass`) asks for it.
     val joined = a.join(b,
         col("a.band") === col("b.band") &&
           col("a.bucket") === col("b.bucket") &&

@@ -590,14 +590,15 @@ object Checkpoint {
           if (failDays.contains(day))
             throw new RuntimeException(s"injected day failure for $day")
           val dayPages = withDay.filter(col("day") === day).drop("day")
-          val nIn = dayPages.count()
           // lineage: order-insensitive fingerprint of the partition's input
           // keys (bit_xor, not sum — overflow-free under ANSI mode)
-          val fp = dayPages.agg(expr("bit_xor(xxhash64(url, warc_ts))"))
-            .first().getLong(0)
+          val in = dayPages.agg(count(lit(1)),
+            expr("bit_xor(xxhash64(url, warc_ts))")).first()
+          val (nIn, fp) = (in.getLong(0), in.getLong(1))
           val clusters = DedupPipeline.run(spark, dayPages, cfg)
-          val nClustered = clusters.count()
-          val nClusters = clusters.select("cluster_id").distinct().count()
+          // cluster_id is a sha1, never null, so countDistinct counts every cluster
+          val out = clusters.agg(count(lit(1)), countDistinct(col("cluster_id"))).first()
+          val (nClustered, nClusters) = (out.getLong(0), out.getLong(1))
           clusters.write.mode(SaveMode.Overwrite).parquet(s"$root/output/day=$day")
           val m = RunMetrics(day, cfgHash, nIn, nClustered, nClusters,
             nClustered - nClusters, System.currentTimeMillis() - t0, fp,

@@ -97,13 +97,13 @@ class KernelSpec extends AnyFunSuite {
     val b = MinHash.shingles("the quick brown fox jumps over the lazy cat and runs away", 3)
     val exact = MinHash.exactJaccard(a, b)
     val est = MinHash.estimatedJaccard(
-      MinHash.signature(a, 256), MinHash.signature(b, 256))
+      MinHash.signatureOPH(a, 256), MinHash.signatureOPH(b, 256))
     assert(math.abs(exact - est) < 0.15, s"exact=$exact est=$est")
     // identical texts -> identical signatures
-    assert(MinHash.signature(a, 128).sameElements(MinHash.signature(a, 128)))
-    assert(MinHash.estimatedJaccard(MinHash.signature(a, 128), MinHash.signature(a, 128)) == 1.0)
+    assert(MinHash.signatureOPH(a, 128).sameElements(MinHash.signatureOPH(a, 128)))
+    assert(MinHash.estimatedJaccard(MinHash.signatureOPH(a, 128), MinHash.signatureOPH(a, 128)) == 1.0)
     // short text -> null signature
-    assert(MinHash.signature(MinHash.shingles("ab", 3), 128) == null)
+    assert(MinHash.signatureOPH(MinHash.shingles("ab", 3), 128) == null)
   }
 
   test("simhash hamming tracks similarity") {

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.functions.Fns
 import graft.operators.{DedupConfig, Multimodal}
 import graft.runtime.Checkpoint
 import graft.sources.PagesGen
@@ -60,6 +61,31 @@ class RuntimeSpec extends AnyFunSuite {
     // config change invalidates checkpoints (different hash -> full rerun)
     val rerun = Checkpoint.runIncremental(spark, pages, root, cfg.copy(threshold = 0.95))
     assert(rerun.size == 3)
+  }
+
+  test("metrics row holds each day's input count, fingerprint and output counts") {
+    val pages = PagesGen.generate(spark, 400, nDomains = 20, nDays = 2, seed = 11L)
+    val root = freshRoot()
+    assert(Checkpoint.runIncremental(spark, pages, root, DedupConfig()).size == 2)
+
+    val input = pages.withColumn("day", Fns.dayKey(col("warc_ts")))
+    val rows = spark.read.parquet(s"$root/metrics").collect()
+    assert(rows.map(_.getAs[String]("day")).sorted.sameElements(
+      input.select("day").distinct().collect().map(_.getString(0)).sorted))
+    rows.foreach { m =>
+      val day = m.getAs[String]("day")
+      val in = input.filter(col("day") === day)
+      val out = spark.read.parquet(s"$root/output/day=$day")
+      val nClustered = out.count()
+      val nClusters = out.select("cluster_id").distinct().count()
+      assert(nClusters > 0, s"$day: no clusters, the row checks nothing")
+      assert(m.getAs[Long]("nDocsIn") == in.count(), day)
+      assert(m.getAs[Long]("inputFingerprint") ==
+        in.agg(expr("bit_xor(xxhash64(url, warc_ts))")).first().getLong(0), day)
+      assert(m.getAs[Long]("nClustered") == nClustered, day)
+      assert(m.getAs[Long]("nClusters") == nClusters, day)
+      assert(m.getAs[Long]("nDuplicatesRemoved") == nClustered - nClusters, day)
+    }
   }
 
   test("multimodal stub pipeline: schema, determinism, batch shape") {
