@@ -87,12 +87,6 @@ final case class DedupConfig(
       * brute-force oracle. Set < 0 to disable.
       */
     simhash128PregateMaxHamming: Int = 42,
-    /** Collapse byte-identical texts to one representative before LSH and
-      * fan members back into components after CC. Exact-duplicate semantics
-      * are unchanged (cosine of identical texts is 1.0); candidate volume
-      * for an identical family drops from O(B²) to 0.
-      */
-    exactPrecollapse: Boolean = true,
     /** Drop (band, bucket) groups with more rows than this before the LSH
       * self-join (document-frequency cap on bucket keys). <= 0 disables.
       *
@@ -343,43 +337,33 @@ object DedupPipeline {
     // (Round 3 shaped this as a join + a left-anti of the same full-text
     // frame — the corpus text shuffled TWICE, and BENCH_r03 measured
     // shuffle ≈ read at 49 KB/doc. This stage was the bulk of it.)
-    var keyed: DataFrame = null
-    val (reps, members) =
-      if (cfg.exactPrecollapse) {
-        // n_chars is computed MAP-SIDE here so the member-rows plan below
-        // never needs the text column: its copy of the join shuffles only
-        // (chash, url, warc_ts, n_chars) — ~90 B/row, not the document.
-        // bigCacheLevel (DISK_ONLY), deliberately: this is the full
-        // corpus INCLUDING text — the pipeline's biggest cache. Held
-        // on-heap (MEMORY_AND_DISK) it fills the unified pool's storage
-        // side, and the big sort stages' execution requests then evict it
-        // page-by-page under the UnifiedMemoryManager lock — at 32 threads
-        // that is a measured convoy (27/32 task threads parked in
-        // acquireExecutionMemory, 2M-doc bench) plus ~19 re-scans of the
-        // source parquet as the evicted partitions recompute. Serialized on
-        // scratch disk (tmpfs here, node-local SSD on a cluster) it costs
-        // one write + cheap re-reads and leaves the whole pool to execution.
-        keyed = projected.withColumn("chash", chashOf(col("text")))
-          .withColumn("n_chars", length(col("text")))
-          .persist(bigCacheLevel)
-        val dupGroups = keyed.groupBy(col("chash"))
-          .agg(min(col("url")).as("rep_url"), count(lit(1)).as("grp_n"))
-          .filter(col("grp_n") >= 2)
-        val repRows = keyed.join(dupGroups, Seq("chash"), "left")
-          .filter(col("rep_url").isNull || col("url") === col("rep_url"))
-          .select(col("url"), col("warc_ts"), col("text"))
-        // (url, warc_ts, n_chars, rep_uid, exact_grp_n) for every input row
-        val memberRows = keyed.drop("text").join(dupGroups, Seq("chash"), "left")
-          .select(col("url"), col("warc_ts"), col("n_chars"),
-            uidOf(coalesce(col("rep_url"), col("url"))).as("rep_uid"),
-            coalesce(col("grp_n"), lit(1L)).as("exact_grp_n"))
-        (repRows, memberRows)
-      } else {
-        (projected,
-          projected.select(col("url"), col("warc_ts"),
-            length(col("text")).as("n_chars"),
-            uidOf(col("url")).as("rep_uid"), lit(1L).as("exact_grp_n")))
-      }
+    // n_chars is computed MAP-SIDE here so the member-rows plan below
+    // never needs the text column: its copy of the join shuffles only
+    // (chash, url, warc_ts, n_chars) — ~90 B/row, not the document.
+    // bigCacheLevel (DISK_ONLY), deliberately: this is the full
+    // corpus INCLUDING text — the pipeline's biggest cache. Held
+    // on-heap (MEMORY_AND_DISK) it fills the unified pool's storage
+    // side, and the big sort stages' execution requests then evict it
+    // page-by-page under the UnifiedMemoryManager lock — at 32 threads
+    // that is a measured convoy (27/32 task threads parked in
+    // acquireExecutionMemory, 2M-doc bench) plus ~19 re-scans of the
+    // source parquet as the evicted partitions recompute. Serialized on
+    // scratch disk (tmpfs here, node-local SSD on a cluster) it costs
+    // one write + cheap re-reads and leaves the whole pool to execution.
+    val keyed = projected.withColumn("chash", chashOf(col("text")))
+      .withColumn("n_chars", length(col("text")))
+      .persist(bigCacheLevel)
+    val dupGroups = keyed.groupBy(col("chash"))
+      .agg(min(col("url")).as("rep_url"), count(lit(1)).as("grp_n"))
+      .filter(col("grp_n") >= 2)
+    val reps = keyed.join(dupGroups, Seq("chash"), "left")
+      .filter(col("rep_url").isNull || col("url") === col("rep_url"))
+      .select(col("url"), col("warc_ts"), col("text"))
+    // (url, warc_ts, n_chars, rep_uid, exact_grp_n) for every input row
+    val members = keyed.drop("text").join(dupGroups, Seq("chash"), "left")
+      .select(col("url"), col("warc_ts"), col("n_chars"),
+        uidOf(coalesce(col("rep_url"), col("url"))).as("rep_uid"),
+        coalesce(col("grp_n"), lit(1L)).as("exact_grp_n"))
 
     // `members` does not depend on stages 1-4, but left lazy it is
     // evaluated only inside the post-CC assignment join — a measured ~10 s
@@ -420,7 +404,7 @@ object DedupPipeline {
         if (sigs != null) sigs.unpersist()
         membersPart.unpersist()
       }
-      if (keyed != null) keyed.unpersist()
+      keyed.unpersist()
       spark.sparkContext.setJobDescription(callerDescription)
     }
   }

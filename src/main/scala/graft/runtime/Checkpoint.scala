@@ -35,9 +35,12 @@ object Checkpoint {
       nClusters: Long, nDuplicatesRemoved: Long, elapsedMs: Long,
       inputFingerprint: Long, status: String, startedAtMs: Long)
 
+  /** The literal `true` fills the slot of a removed, always-on option, so
+    * existing roots keep their hash and still resume.
+    */
   def configHash(cfg: DedupConfig): String = {
     val s = s"${cfg.shingleK}|${cfg.numHashes}|${cfg.bands}|${cfg.threshold}|${cfg.maxGroupSize}|${cfg.seed}|" +
-      s"${cfg.simhashPregateMaxHamming}|${cfg.simhash128PregateMaxHamming}|${cfg.exactPrecollapse}|${cfg.maxBucketSize}|${cfg.lcsMinRatio}"
+      s"${cfg.simhashPregateMaxHamming}|${cfg.simhash128PregateMaxHamming}|true|${cfg.maxBucketSize}|${cfg.lcsMinRatio}"
     java.security.MessageDigest.getInstance("SHA-1")
       .digest(s.getBytes("UTF-8")).take(8).map(b => f"${b & 0xff}%02x").mkString
   }
@@ -82,167 +85,182 @@ object Checkpoint {
   }
 
   // ------------------------------------------------------------------
-  // Single-writer lock + heartbeat (reference `ingestion/repository.py`:
-  // start_run refuses a second concurrent RUNNING run per source
-  // (:151-175), stale RUNNING runs are auto-failed (:126-149), touch_run
-  // heartbeats per page (:177-183)).
+  // Lease files: the single-writer run lock and the per-day leases.
   //
-  // The lock is a file created atomically (POSIX O_EXCL via
-  // Files.createFile) under <root>/locks/, keyed by (root, configHash):
-  // driver-side mutual exclusion, exactly the granularity the reference
-  // locks at. A lock whose heartbeat is older than `staleTtlMs` is reaped:
-  // a STALE_FAILED row is appended to <root>/runs and the lock replaced.
-  // (On an object store without atomic create, swap this for a
-  // conditional-put — the call sites don't change.)
+  // Both are one file under <root>/locks/ holding `owner|acquiredAtMs|
+  // heartbeatAtMs` (day leases written before the heartbeat field hold
+  // `owner|acquiredAtMs`). A file is stale when its last timestamp is older
+  // than the TTL, or, when its content does not parse (a torn create), when
+  // its mtime is. [[LeaseFile]] is the whole protocol; the callers below only
+  // map its outcome to their policy. (On an object store without atomic
+  // create, swap LeaseFile for a conditional-put; the call sites don't
+  // change.)
   // ------------------------------------------------------------------
 
   final case class LockInfo(runId: String, acquiredAtMs: Long, heartbeatAtMs: Long)
 
+  private object LeaseFile {
+    import java.nio.file.{Files, FileAlreadyExistsException, NoSuchFileException, Path}
+
+    /** Outcome of [[take]]. `reaped` is the stale content this caller moved
+      * aside before creating (exactly one caller reaps a given stale file);
+      * `displaced` is a FRESH owner's content that was moved aside in a reap
+      * race and could not be put back, so that owner has lost its file.
+      */
+    sealed trait Take
+    final case class Taken(reaped: Option[String]) extends Take
+    final case class Held(content: String) extends Take
+    final case class Lost(reaped: Option[String], displaced: Option[String]) extends Take
+
+    /** Outcome of [[moveAside]]. */
+    private sealed trait Aside
+    private case object Absent extends Aside
+    private final case class Removed(content: String) extends Aside
+    private final case class Refused(content: String, restored: Boolean) extends Aside
+
+    def parse(content: String): Option[LockInfo] = content.split('|') match {
+      case Array(id, acq) => acq.toLongOption.map(a => LockInfo(id, a, a))
+      case Array(id, acq, hb) =>
+        for (a <- acq.toLongOption; h <- hb.toLongOption) yield LockInfo(id, a, h)
+      case _ => None
+    }
+
+    def read(p: Path): Option[String] =
+      try Some(Files.readString(p)) catch { case _: java.io.IOException => None }
+
+    private def stale(p: Path, content: String, ttlMs: Long, nowMs: Long): Boolean =
+      parse(content).map(_.heartbeatAtMs)
+        .orElse(try Some(Files.getLastModifiedTime(p).toMillis)
+                catch { case _: java.io.IOException => None })
+        .forall(t => nowMs - t > ttlMs)
+
+    /** Create `p` WITH its content in one step: write a unique sibling, then
+      * `createLink`, which is an atomic create-if-absent, so no process ever
+      * sees `p` existing but empty. A crash between a plain create and its
+      * write would leave an unparseable file that blocks every worker for a
+      * TTL. False if `p` already exists. Filesystems without hard links fall
+      * back to create-then-write; the mtime staleness rule reaps a torn file.
+      */
+    private def create(p: Path, content: String): Boolean = {
+      val tmp = p.resolveSibling(s".${p.getFileName}.new.${java.util.UUID.randomUUID()}")
+      Files.writeString(tmp, content)
+      try { Files.createLink(p, tmp); true }
+      catch {
+        case _: FileAlreadyExistsException => false
+        case _: UnsupportedOperationException =>
+          try { Files.createFile(p); Files.writeString(p, content); true }
+          catch { case _: FileAlreadyExistsException => false }
+      } finally { Files.deleteIfExists(tmp): Unit }
+    }
+
+    /** Remove `p` iff `accept` holds for its content, atomically with
+      * respect to every other lease operation.
+      *
+      * The file is re-read right before the move because the caller's own
+      * read may be arbitrarily old: moving a file that has since been
+      * replaced by a fresh owner opens a window in which a third taker's
+      * create succeeds. The move itself (ATOMIC_MOVE to a unique name) has
+      * exactly one winner among concurrent movers, and `accept` is checked
+      * again on what was moved. A refused file is put back with a
+      * create-if-absent, never a move: a rename would replace a file a third
+      * taker created meanwhile. If such a file exists the moved owner has
+      * lost its file (`restored = false`).
+      */
+    private def moveAside(p: Path, accept: String => Boolean): Aside = {
+      read(p) match {
+        case None => Absent
+        case Some(cur) if !accept(cur) => Refused(cur, restored = true)
+        case Some(_) =>
+          val aside = p.resolveSibling(s"${p.getFileName}.aside.${java.util.UUID.randomUUID()}")
+          try Files.move(p, aside, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          catch { case _: NoSuchFileException => return Absent }
+          val moved = read(aside).getOrElse("")
+          val out = if (accept(moved)) Removed(moved) else Refused(moved, create(p, moved))
+          Files.deleteIfExists(aside)
+          out
+      }
+    }
+
+    /** Take `p` for `owner`: a fresh file of another owner is [[Held]]; a
+      * stale one is reaped first; the atomic create decides among racers.
+      */
+    def take(p: Path, owner: String, ttlMs: Long, nowMs: Long): Take = {
+      Files.createDirectories(p.getParent)
+      val reaped = read(p) match {
+        case None => None
+        case Some(cur) if !stale(p, cur, ttlMs, nowMs) => return Held(cur)
+        case Some(cur) => moveAside(p, _ == cur) match {
+          case Removed(old) => Some(old)
+          case Refused(c, restored) => return Lost(None, Option.when(!restored)(c))
+          case Absent => None // another reaper won; the create decides
+        }
+      }
+      if (create(p, s"$owner|$nowMs|$nowMs")) Taken(reaped) else Lost(reaped, None)
+    }
+
+    /** Replace `owner`'s file with `content`. False iff `owner` no longer
+      * holds it. A blind overwrite would clobber a new owner's file created
+      * after a reap; instead the file is moved aside, checked, and the new
+      * content published with a create, so a taker that slips into the empty
+      * window wins and this owner learns it lost. A missing file is left
+      * missing (a reap is in flight; the owner learns its fate next time).
+      */
+    def refresh(p: Path, owner: String, content: String): Boolean =
+      moveAside(p, _.startsWith(s"$owner|")) match {
+        case Absent => true
+        case Refused(_, _) => false
+        case Removed(_) => create(p, content)
+      }
+
+    /** Remove `p` iff `owner` still holds it. */
+    def release(p: Path, owner: String): Unit =
+      moveAside(p, _.startsWith(s"$owner|")): Unit
+  }
+
   private def lockPath(root: String, cfgHash: String) =
     java.nio.file.Paths.get(s"$root/locks/$cfgHash.lock")
 
-  private def readLock(root: String, cfgHash: String): Option[LockInfo] = {
-    val p = lockPath(root, cfgHash)
-    if (!java.nio.file.Files.exists(p)) None
-    else java.nio.file.Files.readString(p).split('|') match {
-      case Array(id, acq, hb) => Some(LockInfo(id, acq.toLong, hb.toLong))
-      case _ => None
-    }
-  }
+  private def readLock(root: String, cfgHash: String): Option[LockInfo] =
+    LeaseFile.read(lockPath(root, cfgHash)).flatMap(LeaseFile.parse)
 
-  /** Atomically create `p` WITH its content in one step (hard-link trick:
-    * write a unique sibling, then `createLink` — link(2) is atomic
-    * create-if-absent, so no other process can ever observe `p` existing
-    * but empty). A crash between a plain createFile and the content write
-    * would otherwise leave an unparseable empty lock/lease that blocks all
-    * workers forever (round-3 review finding). Returns false if `p` already
-    * exists (lost the race). Falls back to create-then-write on filesystems
-    * without hard links — there the mtime-TTL reap path below covers the
-    * torn-create window.
-    */
-  private def atomicCreateWithContent(p: java.nio.file.Path, content: String): Boolean = {
-    val tmp = p.resolveSibling(s".${p.getFileName}.new.${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.writeString(tmp, content)
-    try { java.nio.file.Files.createLink(p, tmp); true }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-      case _: UnsupportedOperationException =>
-        try {
-          java.nio.file.Files.createFile(p)
-          java.nio.file.Files.writeString(p, content)
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally { java.nio.file.Files.deleteIfExists(tmp): Unit }
-  }
-
-  /** File mtime in ms, or None if it vanished concurrently. */
-  private def mtimeMs(p: java.nio.file.Path): Option[Long] =
-    try Some(java.nio.file.Files.getLastModifiedTime(p).toMillis)
-    catch { case _: java.io.IOException => None }
-
-  /** Acquire the single-writer lock or throw. A stale lock (heartbeat older
-    * than `staleTtlMs`) is auto-failed first, mirroring the reference's
-    * stale-RUNNING recovery. Returns the new run id.
+  /** Acquire the single-writer lock (reference `ingestion/repository.py`
+    * start_run, :151-175) or throw. The lock is keyed by (root, configHash).
+    * A stale lock is auto-failed first (:126-149): exactly one acquirer
+    * appends its STALE_FAILED row. Returns the new run id.
     */
   def acquireLock(spark: SparkSession, root: String, cfgHash: String,
                   staleTtlMs: Long, nowMs: Long = System.currentTimeMillis()): String = {
-    val p = lockPath(root, cfgHash)
-    java.nio.file.Files.createDirectories(p.getParent)
-    // raw content + parsed form: an UNPARSEABLE lock (torn create on a
-    // no-hardlink filesystem) must not block forever — it goes stale by
-    // file mtime instead of by heartbeat.
-    val raw: Option[String] =
-      if (!java.nio.file.Files.exists(p)) None
-      else try Some(java.nio.file.Files.readString(p))
-      catch { case _: java.io.IOException => None } // concurrently reaped
-    raw.foreach { content =>
-      val held = content.split('|') match {
-        case Array(id, acq, hb) => Some(LockInfo(id, acq.toLong, hb.toLong))
-        case _ => None
-      }
-      val fresh = held match {
-        case Some(info) => nowMs - info.heartbeatAtMs <= staleTtlMs
-        case None => mtimeMs(p).exists(m => nowMs - m <= staleTtlMs)
-      }
-      if (fresh)
+    val runId = java.util.UUID.randomUUID().toString
+    def record(status: String, error: String)(old: String): Unit =
+      LeaseFile.parse(old).foreach(i =>
+        appendRunRow(spark, root, i.runId, cfgHash, status, i.acquiredAtMs, nowMs, error))
+    val staleFailed: String => Unit =
+      record("STALE_FAILED", "Auto-recovered stale running run after crash/interruption.")
+    LeaseFile.take(lockPath(root, cfgHash), runId, staleTtlMs, nowMs) match {
+      case LeaseFile.Taken(reaped) =>
+        reaped.foreach(staleFailed)
+        appendRunRow(spark, root, runId, cfgHash, "RUNNING", nowMs, 0L, "")
+        runId
+      case LeaseFile.Held(content) =>
         throw new IllegalStateException(
           s"another run is already active for this root/config " +
-            held.map(i => s"(runId=${i.runId}, heartbeat ${nowMs - i.heartbeatAtMs} ms ago)")
+            LeaseFile.parse(content)
+              .map(i => s"(runId=${i.runId}, heartbeat ${nowMs - i.heartbeatAtMs} ms ago)")
               .getOrElse("(unparseable lock, recent mtime)"))
-      // stale: reap ATOMICALLY — move the lock file aside to a unique reap
-      // name first. ATOMIC_MOVE guarantees exactly one of N concurrent
-      // reapers wins the move; a plain delete+create lets reaper B delete
-      // the lock reaper A just created (TOCTOU double-writer). Only the
-      // winner appends STALE_FAILED (reference repository.py:126-149).
-      //
-      // Re-read IMMEDIATELY before the move: this thread's `raw` read may
-      // be arbitrarily old (descheduled thread), and a winner's FRESH lock
-      // may have replaced the stale one since. Moving that fresh lock
-      // aside — even transiently, for the content check below — opens a
-      // lock-absent window in which a third acquirer's create succeeds,
-      // dispossessing the winner (observed as a 2-winner flake in
-      // Round3Spec's 8-thread reap race). With the re-read, a steal
-      // requires the fresh create to land inside the read→move syscall
-      // gap; the restore/DISPOSSESSED path below remains the backstop.
-      val reaped = p.resolveSibling(
-        s"${p.getFileName}.reaped.${java.util.UUID.randomUUID()}")
-      try {
-        val cur = java.nio.file.Files.readString(p)
-        if (cur != content)
-          throw new IllegalStateException(
-            "lock changed during stale reap; another run is active")
-        java.nio.file.Files.move(p, reaped,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        // verify we moved the lock we READ — if the content changed, a
-        // concurrent winner already reaped + recreated it and we just stole
-        // a FRESH lock; put it back and refuse.
-        val moved = java.nio.file.Files.readString(reaped)
-        if (moved != content) {
-          try java.nio.file.Files.move(reaped, p,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            // a third acquirer created a new lock meanwhile, so the FRESH
-            // lock we stole cannot be restored: its owner has been
-            // dispossessed. SURFACE that in the runs table (the owner's
-            // next heartbeat also throws on the runId mismatch, stopping
-            // it) instead of silently opening a two-writer window.
-            moved.split('|') match {
-              case Array(id, acq, _) =>
-                appendRunRow(spark, root, id, cfgHash, "DISPOSSESSED",
-                  acq.toLong, nowMs,
-                  "Fresh lock displaced during concurrent stale-reap race; owner must stop at next heartbeat.")
-              case _ => ()
-            }
-            java.nio.file.Files.deleteIfExists(reaped): Unit
-          }
-          throw new IllegalStateException(
-            "lock changed during stale reap; another run is active")
-        }
-        held.foreach { info =>
-          appendRunRow(spark, root, info.runId, cfgHash, "STALE_FAILED",
-            info.acquiredAtMs, nowMs, "Auto-recovered stale running run after crash/interruption.")
-        }
-        java.nio.file.Files.deleteIfExists(reaped): Unit
-      } catch {
-        case _: java.nio.file.NoSuchFileException => // another reaper won; fall
-        // through to the atomic create below, which decides the new owner
-      }
+      case LeaseFile.Lost(reaped, displaced) =>
+        reaped.foreach(staleFailed)
+        // the displaced owner's next heartbeat throws; the row records why
+        displaced.foreach(record("DISPOSSESSED",
+          "Fresh lock displaced during concurrent stale-reap race; owner must stop at next heartbeat."))
+        throw new IllegalStateException("another run acquired the lock concurrently")
     }
-    val runId = java.util.UUID.randomUUID().toString
-    // create WITH content in one atomic step — no observable empty-lock state
-    if (!atomicCreateWithContent(p, s"$runId|$nowMs|$nowMs"))
-      throw new IllegalStateException("another run acquired the lock concurrently")
-    appendRunRow(spark, root, runId, cfgHash, "RUNNING", nowMs, 0L, "")
-    runId
   }
 
-  /** Per-partition liveness signal (reference touch_run). THROWS if the
-    * lock now names a different run — this run was dispossessed (reaped as
-    * stale, or displaced in a reap race) and must stop instead of running
-    * concurrently with the new owner. A MISSING lock is a no-op (transient
-    * reap-in-flight window; the next heartbeat resolves it) — the caller's
-    * committed work stays safe because output writes are idempotent per
-    * partition.
+  /** Per-partition liveness signal (reference touch_run, :177-183). THROWS if
+    * the lock now names a different run: this run was dispossessed and must
+    * stop instead of running next to the new owner. A MISSING lock is a
+    * no-op (a reap is in flight; the next heartbeat resolves it); committed
+    * work stays safe because output writes are idempotent per partition.
     */
   def heartbeat(root: String, cfgHash: String, runId: String,
                 nowMs: Long = System.currentTimeMillis()): Unit =
@@ -253,53 +271,21 @@ object Checkpoint {
       heartbeatPublish(lockPath(root, cfgHash), runId, held.acquiredAtMs, nowMs)
     }
 
-  /** CAS publish step of [[heartbeat]], separated so the read-vs-publish
-    * race is deterministically testable. A blind REPLACE_EXISTING write here
-    * would re-open the race this recovery exists to close: between the
-    * caller's read and the write, a concurrent acquirer can reap this lock
-    * as stale and create its OWN — a replace would then overwrite the new
-    * owner's lock with the stale run's id, dispossessing the legitimate
-    * owner while the stale run survives. Instead:
-    *
-    *   1. move the lock aside atomically (exactly one mover wins; a missing
-    *      lock means a reap is in flight — no-op, next heartbeat resolves);
-    *   2. verify the moved content still carries THIS runId — if not, we
-    *      stole the new owner's lock in the race: restore it byte-identical
-    *      and throw (this run stops; the owner is untouched);
-    *   3. publish the refreshed copy with createLink (atomic
-    *      create-if-absent): if any acquirer slipped a new lock into the
-    *      empty window, the link fails and THIS run throws — the window
-    *      never has two writers.
+  /** Publish step of [[heartbeat]], separated so the read-vs-publish race is
+    * testable: the lock may change hands between [[heartbeat]]'s read and
+    * this write.
     */
   private[graft] def heartbeatPublish(p: java.nio.file.Path, runId: String,
-                                        acquiredAtMs: Long, nowMs: Long): Unit = {
-    val aside = p.resolveSibling(
-      s"${p.getFileName}.hb.${java.util.UUID.randomUUID()}")
-    try java.nio.file.Files.move(p, aside,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.NoSuchFileException => return }
-    def dispossessed() = new IllegalStateException(
-      s"run $runId was dispossessed during heartbeat; stopping")
-    val moved = try java.nio.file.Files.readString(aside)
-                catch { case _: java.io.IOException => "" }
-    if (!moved.startsWith(s"$runId|")) {
-      try java.nio.file.Files.move(aside, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(aside): Unit }
-      throw dispossessed()
-    }
-    val published = atomicCreateWithContent(p, s"$runId|$acquiredAtMs|$nowMs")
-    java.nio.file.Files.deleteIfExists(aside)
-    if (!published) throw dispossessed()
-  }
+                                        acquiredAtMs: Long, nowMs: Long): Unit =
+    if (!LeaseFile.refresh(p, runId, s"$runId|$acquiredAtMs|$nowMs"))
+      throw new IllegalStateException(s"run $runId was dispossessed during heartbeat; stopping")
 
   def releaseLock(spark: SparkSession, root: String, cfgHash: String, runId: String,
                   status: String = "COMPLETED", error: String = ""): Unit =
     readLock(root, cfgHash).filter(_.runId == runId).foreach { held =>
       appendRunRow(spark, root, runId, cfgHash, status, held.acquiredAtMs,
         System.currentTimeMillis(), error)
-      java.nio.file.Files.deleteIfExists(lockPath(root, cfgHash)): Unit
+      LeaseFile.release(lockPath(root, cfgHash), runId)
     }
 
   /** Concurrency-safe append of a small bookkeeping DataFrame into `dir`.
@@ -352,84 +338,38 @@ object Checkpoint {
   }
 
   // ------------------------------------------------------------------
-  // Per-day lease rows: N concurrent drivers drain DISJOINT days of one
-  // root/config. A lease is an atomically-created file keyed by (cfgHash,
-  // day); a worker that fails to create it skips the day (another worker
-  // owns it). Stale leases (older than the TTL — a crashed worker) are
-  // reaped with the same ATOMIC_MOVE + content-verify dance as the global
-  // lock. Complements the global single-writer lock: use the global lock
-  // for one-writer-per-config, or day leases for cooperating workers.
+  // Per-day leases: N concurrent drivers drain DISJOINT days of one
+  // root/config. A worker that cannot take a day's lease skips the day
+  // (another live worker owns it); a crashed worker's lease is reaped after
+  // the TTL. Complements the global lock: use the lock for one writer per
+  // config, or day leases for cooperating workers.
   // ------------------------------------------------------------------
 
   private def dayLeasePath(root: String, cfgHash: String, day: String) =
     java.nio.file.Paths.get(s"$root/locks/days/$cfgHash/$day.lease")
 
-  /** Try to take the lease for `day`; true iff this run now owns it. */
+  /** Try to take the lease for `day`; true iff this run now owns it. An
+    * owner that lost its lease in a reap race is recorded in a
+    * `<day>.lease.dispossessed` marker holding its lease content.
+    */
   def tryAcquireDayLease(root: String, cfgHash: String, day: String,
                          runId: String, staleTtlMs: Long,
                          nowMs: Long = System.currentTimeMillis()): Boolean = {
     val p = dayLeasePath(root, cfgHash, day)
-    java.nio.file.Files.createDirectories(p.getParent)
-    if (java.nio.file.Files.exists(p)) {
-      val content = try java.nio.file.Files.readString(p) catch {
-        case _: java.io.IOException => return false // concurrently reaped
-      }
-      // staleness: by acquisition time when parseable; by file mtime when
-      // not (a torn create on a no-hardlink filesystem must not block the
-      // day forever)
-      val stale = content.split('|') match {
-        case Array(_, acq) => nowMs - acq.toLong > staleTtlMs
-        case _ => mtimeMs(p).exists(m => nowMs - m > staleTtlMs)
-      }
-      if (!stale) return false // held and fresh
-      // stale: exactly one reaper wins the move; verify we moved what
-      // we read (not a fresh lease that raced in). Re-read immediately
-      // before the move — same stale-read steal window as the global
-      // lock's reap (see acquireLock): without it a descheduled reaper
-      // can move a fresh lease aside and let a third worker double-own
-      // the day for the restore interval.
-      val reaped = p.resolveSibling(
-        s"${p.getFileName}.reaped.${java.util.UUID.randomUUID()}")
-      try {
-        if (java.nio.file.Files.readString(p) != content) return false
-        java.nio.file.Files.move(p, reaped,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        if (java.nio.file.Files.readString(reaped) != content) {
-          try java.nio.file.Files.move(reaped, p,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            // a third worker's create landed first, so the FRESH lease we
-            // stole cannot be restored: its owner is dispossessed for the
-            // rest of its day. Mirror acquireLock's DISPOSSESSED surfacing
-            // (no runs table at this layer — a marker file next to the
-            // lease records who lost it, and releaseDayLease's
-            // content-verify keeps the loser from deleting the winner's
-            // lease afterwards; round-5 ADVICE).
-            val marker = p.resolveSibling(s"${p.getFileName}.dispossessed")
-            try java.nio.file.Files.writeString(marker,
-              java.nio.file.Files.readString(reaped))
-            catch { case _: java.io.IOException => }
-            System.err.println(
-              s"[checkpoint] day-lease dispossession: $p (owner lease moved aside during concurrent stale-reap; marker written)")
-            java.nio.file.Files.deleteIfExists(reaped): Unit }
-          return false
+    LeaseFile.take(p, runId, staleTtlMs, nowMs) match {
+      case LeaseFile.Taken(_) => true
+      case LeaseFile.Held(_) => false
+      case LeaseFile.Lost(_, displaced) =>
+        displaced.foreach { c =>
+          try java.nio.file.Files.writeString(p.resolveSibling(s"${p.getFileName}.dispossessed"), c)
+          catch { case _: java.io.IOException => }
         }
-        java.nio.file.Files.deleteIfExists(reaped): Unit
-      } catch { case _: java.nio.file.NoSuchFileException => }
+        false
     }
-    // create WITH content in one atomic step — a crash can no longer leave
-    // an empty lease that permanently blocks the day (round-3 finding)
-    atomicCreateWithContent(p, s"$runId|$nowMs")
   }
 
-  def releaseDayLease(root: String, cfgHash: String, day: String, runId: String): Unit = {
-    val p = dayLeasePath(root, cfgHash, day)
-    try {
-      if (java.nio.file.Files.exists(p) &&
-          java.nio.file.Files.readString(p).startsWith(s"$runId|"))
-        java.nio.file.Files.deleteIfExists(p): Unit
-    } catch { case _: java.io.IOException => }
-  }
+  def releaseDayLease(root: String, cfgHash: String, day: String, runId: String): Unit =
+    LeaseFile.release(dayLeasePath(root, cfgHash, day), runId)
 
   // ------------------------------------------------------------------
   // Gap / retry ledger (reference `fetch_service.py:43-62` seeds each run

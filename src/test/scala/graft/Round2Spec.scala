@@ -171,6 +171,8 @@ class Round2Spec extends AnyFunSuite {
   test("LCS gate off: golden clusters unchanged (config hash differs though)") {
     assert(Checkpoint.configHash(DedupConfig()) !=
       Checkpoint.configHash(DedupConfig(lcsMinRatio = 0.5)))
+    // pinned: existing checkpoint roots resume only under the same hash
+    assert(Checkpoint.configHash(DedupConfig()) == "f2b2e81f95fd1e42")
   }
 
   // ---- single-writer lock ----------------------------------------------

@@ -49,38 +49,54 @@ class Round3Spec extends AnyFunSuite {
   }
 
   test("stale-lock reap is atomic: N concurrent acquirers -> exactly 1 winner") {
+    // plant a stale lease file in `dir`, race 8 takers on it; the dir must
+    // end holding only that file (no aside/new debris)
+    def race(dir: java.nio.file.Path, name: String, stale: String)(take: Int => Boolean): Int = {
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.writeString(dir.resolve(name), stale)
+      val n = 8
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+      val wins = new java.util.concurrent.atomic.AtomicInteger(0)
+      val futures = (0 until n).map { i =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            gate.await()
+            if (take(i)) wins.incrementAndGet(): Unit
+          }
+        })
+      }
+      gate.countDown()
+      futures.foreach(_.get())
+      pool.shutdown()
+      val left = java.nio.file.Files.list(dir).iterator()
+      var names = List.empty[String]
+      while (left.hasNext) names ::= left.next().getFileName.toString
+      assert(names == List(name), s"debris left: $names")
+      wins.get()
+    }
+
+    // the global lock: heartbeat far in the past
     val root = freshRoot()
     val cfgHash = "deadbeef01"
-    // plant a stale lock (heartbeat far in the past)
-    val lockDir = java.nio.file.Paths.get(s"$root/locks")
-    java.nio.file.Files.createDirectories(lockDir)
-    java.nio.file.Files.writeString(lockDir.resolve(s"$cfgHash.lock"),
-      "stale-run|1000|1000")
-
-    val n = 8
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-    val wins = new java.util.concurrent.atomic.AtomicInteger(0)
-    val futures = (0 until n).map { _ =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          gate.await()
-          try {
-            Checkpoint.acquireLock(spark, root, cfgHash, staleTtlMs = 60000L)
-            wins.incrementAndGet(): Unit
-          } catch { case _: IllegalStateException => () }
-        }
-      })
+    val lockWins = race(java.nio.file.Paths.get(s"$root/locks"), s"$cfgHash.lock",
+      "stale-run|1000|1000") { _ =>
+      try { Checkpoint.acquireLock(spark, root, cfgHash, staleTtlMs = 60000L); true }
+      catch { case _: IllegalStateException => false }
     }
-    gate.countDown()
-    futures.foreach(_.get())
-    pool.shutdown()
-    assert(wins.get() == 1,
-      s"single-writer invariant broken: ${wins.get()} concurrent acquisitions")
+    assert(lockWins == 1,
+      s"single-writer invariant broken: $lockWins concurrent acquisitions")
     // the stale run was failed exactly once in the runs table
     val staleRows = Checkpoint.runs(spark, root)
       .filter(col("runId") === "stale-run" && col("status") === "STALE_FAILED").count()
     assert(staleRows == 1)
+
+    // a day lease in its two-field form: acquisition time far in the past
+    val leaseWins = race(java.nio.file.Paths.get(s"$root/locks/days/$cfgHash"),
+      "2026-01-01.lease", "stale-worker|1000") { i =>
+      Checkpoint.tryAcquireDayLease(root, cfgHash, "2026-01-01", s"w$i", staleTtlMs = 60000L)
+    }
+    assert(leaseWins == 1, s"day double-owned: $leaseWins concurrent leases")
   }
 
   test("two concurrent day-lease workers drain disjoint days; union == plan") {

@@ -51,6 +51,35 @@ class Round5Spec extends AnyFunSuite {
       "no-op heartbeat must not resurrect a reaped lock")
   }
 
+  test("a non-owner's release leaves the owner's lock and lease byte-identical") {
+    val root = freshRoot()
+    val h = "cfgrel"
+    val day = "2026-03-01"
+    val run = Checkpoint.acquireLock(spark, root, h, staleTtlMs = 60000L)
+    assert(Checkpoint.tryAcquireDayLease(root, h, day, "w1", staleTtlMs = 60000L))
+    val lock = java.nio.file.Paths.get(s"$root/locks/$h.lock")
+    val lease = java.nio.file.Paths.get(s"$root/locks/days/$h/$day.lease")
+    val (lockBytes, leaseBytes) =
+      (java.nio.file.Files.readString(lock), java.nio.file.Files.readString(lease))
+    Checkpoint.releaseLock(spark, root, h, "other-run")
+    Checkpoint.releaseDayLease(root, h, day, "w2")
+    Checkpoint.releaseDayLease(root, h, day, "w") // a prefix of the owner's id
+    assert(java.nio.file.Files.readString(lock) == lockBytes, "owner's lock changed")
+    assert(java.nio.file.Files.readString(lease) == leaseBytes, "owner's lease changed")
+    def names(dir: java.nio.file.Path): Set[String] = {
+      val it = java.nio.file.Files.list(dir).iterator()
+      var out = Set.empty[String]
+      while (it.hasNext) out += it.next().getFileName.toString
+      out
+    }
+    assert(names(lock.getParent) == Set(s"$h.lock", "days"), "debris next to the lock")
+    assert(names(lease.getParent) == Set(s"$day.lease"), "debris next to the lease")
+    // the owners' own releases still remove their files
+    Checkpoint.releaseDayLease(root, h, day, "w1")
+    Checkpoint.releaseLock(spark, root, h, run)
+    assert(!java.nio.file.Files.exists(lease) && !java.nio.file.Files.exists(lock))
+  }
+
   test("heartbeat refreshes only the heartbeat field, atomically") {
     val root = freshRoot()
     val h = "cfgfresh"
