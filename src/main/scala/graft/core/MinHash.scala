@@ -41,12 +41,13 @@ object MinHash {
 
   /** Distinct 64-bit hashes of the lowercased text's char k-shingles.
     * Returns empty for texts shorter than k (those never join clusters).
-    * Dedup via sort (primitive arrays, no boxing).
     */
-  def shingles(text: String, k: Int): Array[Long] = {
-    if (text == null) return Array.emptyLongArray
-    val norm = PyText.pyStrip(text.toLowerCase(java.util.Locale.ROOT))
-    val cps = PyText.codePoints(norm)
+  def shingles(text: String, k: Int): Array[Long] =
+    if (text == null) Array.emptyLongArray else shinglesOf(PyText.normalized(text), k)
+
+  /** [[shingles]] over [[PyText.normalized]] code points; dedup via sort
+    * (primitive arrays, no boxing). */
+  def shinglesOf(cps: Array[Int], k: Int): Array[Long] = {
     if (cps.length < k) return Array.emptyLongArray
     val all = new Array[Long](cps.length - k + 1)
     var i = 0
@@ -116,69 +117,83 @@ object MinHash {
 
   /** 128-bit SimHash as two 64-bit halves, one pass over the shingles.
     *
-    * The LOW half is bit-identical to [[simHash]] (same per-bit majority
-    * over the raw shingle hashes) so every existing 64-bit consumer — the
-    * oracle aux export, `p_simhash_pairs`, the streaming dedup state — is
-    * unchanged; the HIGH half runs the same majority over an independently
-    * re-mixed copy of each shingle hash (splitmix64 of h xor a fixed salt,
-    * so the two halves' bits are pairwise independent hash functions of
-    * the shingle set).
+    * Bit b of a half is set iff more than half of the n input hashes have
+    * bit b set (`2 * ones(b) > n`; ties and the empty input give 0). The
+    * LOW half is that majority over the raw shingle hashes — the canonical
+    * 64-bit [[simHash]] that the oracle aux export, `p_simhash_pairs` and
+    * the streaming dedup state consume. The HIGH half runs the same
+    * majority over an independently re-mixed copy of each hash (splitmix64
+    * of h xor a fixed salt), so the two halves are independent hash
+    * functions of the shingle set.
     *
-    * Why 128 bits (round-6 optimization, guide §2.3 "shuffle fewer
-    * bytes"): for two docs with cosine-style similarity s, each SimHash
-    * bit agrees with probability p(s) > 1/2, so the hamming distance of a
-    * TRUE pair concentrates at 128(1-p) with relative spread shrinking as
-    * 1/sqrt(bits), while NOISE pairs concentrate at 64 +- 5.7. Doubling
-    * the bits roughly doubles the true/noise mean separation in units of
-    * noise sigma — at equal recall the gate admits an order of magnitude
-    * fewer noise pairs into the verify join (the dedup pipeline's largest
-    * exchange; measured in BASELINE.md round 6).
+    * Counting is branch-free and lane-packed: accumulator k of a half holds
+    * eight byte lanes, and lane j counts bit 8j + k, so one shingle costs
+    * 8 shifts, masks and adds per half. A lane holds at most 255, so the
+    * lanes are folded into `Int` counts every 255 shingles.
+    *
+    * Why 128 bits (guide §2.3 "shuffle fewer bytes"): for two docs with
+    * cosine-style similarity s, each SimHash bit agrees with probability
+    * p(s) > 1/2, so the hamming distance of a TRUE pair concentrates at
+    * 128(1-p) with relative spread shrinking as 1/sqrt(bits), while NOISE
+    * pairs concentrate at 64 +- 5.7. Doubling the bits roughly doubles the
+    * true/noise mean separation in units of noise sigma — at equal recall
+    * the gate admits an order of magnitude fewer noise pairs into the
+    * verify join (the dedup pipeline's largest exchange; BASELINE.md).
     */
   def simHash128(shingleHashes: Array[Long]): Array[Long] = {
-    if (shingleHashes.isEmpty) return Array(0L, 0L)
-    val counts = new Array[Int](128)
+    val n = shingleHashes.length
+    val ones = new Array[Int](128)
+    val lo = new Array[Long](8)
+    val hi = new Array[Long](8)
     var i = 0
-    while (i < shingleHashes.length) {
-      val h = shingleHashes(i)
-      val g = mix64(h ^ 0x5CA1AB1E5CA1AB1EL) // independent second half
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        if (((g >>> b) & 1L) == 1L) counts(64 + b) += 1 else counts(64 + b) -= 1
-        b += 1
+    while (i < n) {
+      val end = math.min(n, i + 255)
+      while (i < end) {
+        val h = shingleHashes(i)
+        val g = mix64(h ^ 0x5CA1AB1E5CA1AB1EL) // independent second half
+        var k = 0
+        while (k < 8) {
+          lo(k) += (h >>> k) & Lanes
+          hi(k) += (g >>> k) & Lanes
+          k += 1
+        }
+        i += 1
       }
-      i += 1
+      fold(lo, ones, 0)
+      fold(hi, ones, 64)
     }
-    var lo = 0L
-    var hi = 0L
+    var outLo = 0L
+    var outHi = 0L
     var b = 0
     while (b < 64) {
-      if (counts(b) > 0) lo |= (1L << b)
-      if (counts(64 + b) > 0) hi |= (1L << b)
+      if (2 * ones(b) > n) outLo |= 1L << b
+      if (2 * ones(64 + b) > n) outHi |= 1L << b
       b += 1
     }
-    Array(lo, hi)
+    Array(outLo, outHi)
   }
 
-  /** 64-bit SimHash over shingle hashes (unweighted). */
-  def simHash(shingleHashes: Array[Long]): Long = {
-    if (shingleHashes.isEmpty) return 0L
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < shingleHashes.length) {
-      val h = shingleHashes(i)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
+  /** Low byte of each of a Long's eight byte lanes. */
+  private final val Lanes = 0x0101010101010101L
+
+  /** Adds lane j of `acc(k)` to `ones(base + 8j + k)` and clears `acc`. */
+  private def fold(acc: Array[Long], ones: Array[Int], base: Int): Unit = {
+    var k = 0
+    while (k < 8) {
+      val a = acc(k)
+      var j = 0
+      while (j < 8) {
+        ones(base + 8 * j + k) += ((a >>> (8 * j)) & 0xff).toInt
+        j += 1
       }
-      i += 1
+      acc(k) = 0L
+      k += 1
     }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-    out
   }
+
+  /** 64-bit SimHash over shingle hashes (unweighted): the low half of
+    * [[simHash128]]. */
+  def simHash(shingleHashes: Array[Long]): Long = simHash128(shingleHashes)(0)
 
   @inline def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 }

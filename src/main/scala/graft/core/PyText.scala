@@ -56,4 +56,10 @@ object PyText {
 
   /** Code-point array of a string (Python iterates code points). */
   def codePoints(s: String): Array[Int] = s.codePoints().toArray
+
+  /** What every per-doc kernel reads (MinHash shingles, the trigram
+    * embedder): `text` lowercased under `Locale.ROOT`, `strip()`ped, as
+    * code points. */
+  def normalized(text: String): Array[Int] =
+    codePoints(pyStrip(text.toLowerCase(java.util.Locale.ROOT)))
 }

@@ -8,9 +8,11 @@ import graft.core._
   *
   * Everything that CAN be a built-in Catalyst expression chain IS one
   * (codegen'd, pushdown-friendly): language detection, cosine similarity,
-  * hamming distance, URL day-keys. Only genuinely opaque kernels (HTML
-  * extraction, sha1-trigram embedding, MinHash signatures) are Scala UDFs —
-  * pure, null-safe, tested standalone in graft.core.
+  * hamming distance, URL day-keys. Only genuinely opaque kernels are Scala
+  * UDFs — HTML extraction, URL canonicalization, the dense embedding and
+  * the per-doc signature kernel, which derives MinHash, SimHash-128 and
+  * the sparse embedding from one normalization of the text in one UDF
+  * call. All are pure, null-safe and tested standalone in graft.core.
   */
 object Fns {
 
@@ -82,12 +84,6 @@ object Fns {
   }
   val embedUdf = udf { text: String => HashingEmbedder.embed(text) }
 
-  /** Sparse embedding twin (struct(packed: array<bigint>, norm: double)):
-    * ~2.5x fewer shuffle bytes through the verify join, bitwise-equal
-    * cosine (see [[graft.core.HashingEmbedder.embedSparse]]).
-    */
-  val embedSparseUdf = udf { text: String => HashingEmbedder.embedSparse(text) }
-
   /** Exact dense reconstruction of a sparse embedding (oracle export). */
   val sparseToDenseUdf = udf { sv: HashingEmbedder.SparseVec =>
     HashingEmbedder.sparseToDense(sv.packed, sv.norm)
@@ -98,22 +94,38 @@ object Fns {
     */
   def cosineSparseCol(a: Column, b: Column): Column = CosineSparse(a, b)
 
-  /** One-pass signature bundle: shingle once, derive MinHash signature +
-    * 128-bit SimHash + shingle count. `simhash` is the canonical 64-bit
-    * SimHash (bit-identical to [[graft.core.MinHash.simHash]] — the oracle
-    * export and `p_simhash_pairs` consume it); `simhash2` is the
-    * independent high half used only by the dedup candidate pre-gate.
-    * Null signature for texts shorter than k (they can never be near-dups;
-    * callers filter).
+  /** Everything the dedup pipeline derives from one doc's text.
+    *
+    * `minhash` is the OPH MinHash signature, null for texts shorter than k
+    * code points (they can never be near-dups; callers filter). `simhash`
+    * is the canonical 64-bit SimHash ([[graft.core.MinHash.simHash]] — the
+    * oracle export and `p_simhash_pairs` consume it); `simhash2` is the
+    * independent high half of [[graft.core.MinHash.simHash128]], used only
+    * by the dedup candidate pre-gate. `nShingles` counts distinct shingles.
+    * `svec` is the sparse trigram embedding (struct(packed: array<bigint>,
+    * norm: double), ~2.5x fewer verify-join shuffle bytes than the dense
+    * form, bitwise-equal cosine); it is padded, so non-empty, for every
+    * text with a non-blank character.
     */
-  final case class SigBundle(minhash: Array[Long], simhash: Long, simhash2: Long, nShingles: Int)
-  def signaturesUdf(k: Int, numHashes: Int, seed: Long) = udf { text: String =>
-    val sh = MinHash.shingles(text, k)
-    if (sh.isEmpty) SigBundle(null, 0L, 0L, 0)
+  final case class SigBundle(minhash: Array[Long], simhash: Long, simhash2: Long,
+                             nShingles: Int, svec: HashingEmbedder.SparseVec)
+
+  /** The per-doc signature kernel: normalizes the text once and derives
+    * every [[SigBundle]] field from the same code points. */
+  def docSignature(text: String, k: Int, numHashes: Int, seed: Long): SigBundle = {
+    val cps = if (text == null) Array.emptyIntArray else PyText.normalized(text)
+    val sh = MinHash.shinglesOf(cps, k)
+    val svec = HashingEmbedder.embedSparseOf(cps)
+    if (sh.isEmpty) SigBundle(null, 0L, 0L, 0, svec)
     else {
       val s128 = MinHash.simHash128(sh)
-      SigBundle(MinHash.signatureOPH(sh, numHashes, seed), s128(0), s128(1), sh.length)
+      SigBundle(MinHash.signatureOPH(sh, numHashes, seed), s128(0), s128(1), sh.length, svec)
     }
+  }
+
+  /** [[docSignature]] as one UDF: the pipeline runs it once per row. */
+  def signaturesUdf(k: Int, numHashes: Int, seed: Long) = udf { text: String =>
+    docSignature(text, k, numHashes, seed)
   }
 
   /** LSH band-bucket hashes: one 64-bit hash per band over its signature

@@ -111,9 +111,7 @@ object BlockDedup {
     sigs.count() // materialize before the multi-consumer fan-out (see DedupPipeline.run)
     val edges = DedupPipeline.verifiedEdges(sigs, DedupPipeline.candidates(sigs, cfg), cfg)
       .select(col("uid_a").as("src"), col("uid_b").as("dst"))
-    val vertices = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-    val comps = ConnectedComponents.run(spark, vertices, edges)
+    val comps = ConnectedComponents.run(spark, edges)
       .join(sigs.select(col("uid"), col("url")), col("id") === col("uid"))
       .select(col("url").cast("long").as("idx"), col("component"))
     sigs.unpersist()

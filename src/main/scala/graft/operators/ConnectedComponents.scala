@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   * primitive `Array[Long]` on the executor: 4 longs per edge, 2 per vertex
   * row. The driver interns every key as a dense int in an open-addressed
   * table and runs union by size with path halving, keeping each root's
-  * minimum key. Nothing is persisted or checkpointed.
+  * minimum key. Nothing is persisted or checkpointed. Callers whose
+  * vertices all lie on edges pass the edges alone, and then only edges
+  * are collected.
   *
   * Keys are non-null `bigint` or `struct<h1:bigint,h2:bigint>`, normalised
   * to `(k, 0)` or `(h1, h2)`; signed lexicographic order on that pair is
@@ -24,14 +26,9 @@ import org.apache.spark.sql.types._
   * 5.1 M near-clique edges with struct keys (1.0 M vertices), heap used
   * after GC peaked 107-216 B per edge above its level before the call, and
   * the call ran in a 2 GB heap in 4.5 s (SCALE.md). The collected arrays
-  * also count against `spark.driver.maxResultSize` (1 GB by default): with
-  * the pipeline's vertex list, two rows per edge, that is 64 B per edge, or
-  * ~16 M edges.
-  *
-  * @param vertices (id); need not be distinct
-  * @param edges    (src, dst), one row per undirected edge, either direction
-  * @return (id, component), one row per distinct id of `vertices` ∪ the
-  *         edge endpoints; component = the component's minimum key
+  * also count against `spark.driver.maxResultSize` (1 GB by default): the
+  * edges-only form collects 32 B per edge, or ~32 M edges; each vertex row
+  * adds 16 B.
   */
 object ConnectedComponents {
 
@@ -39,8 +36,28 @@ object ConnectedComponents {
     * under Spark's 1000 KiB task-size warning. */
   private val SliceVertices = 1 << 14
 
-  def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val keyType = vertices.schema("id").dataType
+  /** Components over the edge endpoints alone — what a caller needs when
+    * every vertex of interest is in some edge (a vertex with no edge is a
+    * singleton component).
+    *
+    * @param edges (src, dst), one row per undirected edge, either direction
+    * @return (id, component), one row per distinct edge endpoint;
+    *         component = the component's minimum key
+    */
+  def run(spark: SparkSession, edges: DataFrame): DataFrame =
+    components(spark, None, edges)
+
+  /** @param vertices (id); need not be distinct
+    * @param edges    (src, dst), one row per undirected edge, either direction
+    * @return (id, component), one row per distinct id of `vertices` ∪ the
+    *         edge endpoints; component = the component's minimum key
+    */
+  def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame): DataFrame =
+    components(spark, Some(vertices), edges)
+
+  private def components(spark: SparkSession, vertices: Option[DataFrame],
+                         edges: DataFrame): DataFrame = {
+    val keyType = vertices.fold(edges.schema("src").dataType)(_.schema("id").dataType)
     val struct = isStructKey(keyType)
     Seq("src", "dst").foreach { c =>
       require(isStructKey(edges.schema(c).dataType) == struct,
@@ -49,9 +66,9 @@ object ConnectedComponents {
     val sc = spark.sparkContext
     sc.setJobDescription("cc: collect edges")
     val edgeArrs = packed(edges.select(col("src"), col("dst")), struct)
-    val vertexArrs = packed(vertices.select(col("id")), struct)
+    val vertexArrs = vertices.map(v => packed(v.select(col("id")), struct))
     val (edgeParts, vertexParts) =
-      sc.union(edgeArrs, vertexArrs).collect().splitAt(edgeArrs.getNumPartitions)
+      sc.union(edgeArrs +: vertexArrs.toSeq).collect().splitAt(edgeArrs.getNumPartitions)
 
     val uf = new UnionFind
     for (a <- edgeParts; i <- a.indices by 4) uf.union(uf.id(a(i), a(i + 1)), uf.id(a(i + 2), a(i + 3)))

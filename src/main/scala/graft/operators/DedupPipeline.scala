@@ -25,7 +25,9 @@ import graft.functions.Fns
   *      fill one LSH bucket and emit O(B²) candidate pairs; after collapse
   *      it contributes exactly one row. Members fan back in after CC
   *      (identical text ⇒ cosine 1.0 ⇒ same component — semantics identical).
-  *   1. one pass per doc computes MinHash signature + SimHash + embedding
+  *   1. one UDF call per representative normalizes its text once and
+  *      derives the OPH MinHash signature, the 128-bit SimHash and the
+  *      sparse trigram embedding from the same code points
   *   2. LSH banding turns the all-pairs θ-join into an equi-self-join on
   *      (band, bucket) — shuffle-partitioned, AQE-skew-handled. Buckets
   *      hotter than `maxBucketSize` (near-identical-but-not-exact boilerplate
@@ -140,20 +142,16 @@ object DedupPipeline {
   private def chashOf(text: Column): Column =
     struct(xxhash64(text).as("h1"), xxhash64(text, lit(0x5EED5EEDL)).as("h2"))
 
-  /** Per-doc signatures: uid, url, warc_ts, nChars, minhash, simhash, vec.
-    * One UDF pass for shingle-derived values + one for the embedding.
-    * `withText = true` additionally carries the raw text (needed only when
-    * the LCS verify layer is enabled).
+  /** Per-doc signatures: uid, url, warc_ts, n_chars, minhash, simhash,
+    * simhash2, n_shingles, svec — every kernel value from one call of
+    * [[Fns.signaturesUdf]] per row. `withText = true` additionally carries
+    * the raw text (needed only when the LCS verify layer is enabled).
     */
   def signatures(pages: DataFrame, cfg: DedupConfig,
                  withText: Boolean = false): DataFrame = {
     val base = pages
       .select(col("url"), col("warc_ts"), col("text"))
       .withColumn("sig", Fns.signaturesUdf(cfg.shingleK, cfg.numHashes, cfg.seed)(col("text")))
-      // sparse embedding: (bucket, count) pairs + norm — ~2.5x fewer bytes
-      // into the verify shuffle than the dense 384-float form, cosine
-      // bitwise-identical (HashingEmbedder.embedSparse)
-      .withColumn("svec", Fns.embedSparseUdf(col("text")))
     val cols = Seq(
       uidOf(col("url")).as("uid"),
       col("url"), col("warc_ts"),
@@ -162,7 +160,7 @@ object DedupPipeline {
       col("sig.simhash").as("simhash"),
       col("sig.simhash2").as("simhash2"),
       col("sig.nShingles").as("n_shingles"),
-      col("svec")) ++ (if (withText) Seq(col("text")) else Nil)
+      col("sig.svec").as("svec")) ++ (if (withText) Seq(col("text")) else Nil)
     base.select(cols: _*)
   }
 
@@ -376,13 +374,19 @@ object DedupPipeline {
     // repartition(rep_uid) pre-positions the rows so the assignment join
     // exchanges only the small CC-label side. The rows are slim
     // (~90 B/doc, no text), so MEMORY_AND_DISK is not eviction bait.
+    // `keyed` is dropped as soon as both of its readers have filled their
+    // own caches (sigs on the main thread, membersPart here).
     val membersPart = members.repartition(col("rep_uid"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val keyedReaders = new java.util.concurrent.atomic.AtomicInteger(2)
+    val keyedRead = () => if (keyedReaders.decrementAndGet() == 0) keyed.unpersist(): Unit
     val membersPool = java.util.concurrent.Executors.newSingleThreadExecutor()
     val membersFut = membersPool.submit(new java.util.concurrent.Callable[Long] {
       def call(): Long = {
         spark.sparkContext.setJobDescription("members: background materialize")
-        membersPart.count()
+        val n = membersPart.count()
+        keyedRead()
+        n
       }
     })
     membersPool.shutdown()
@@ -394,7 +398,7 @@ object DedupPipeline {
     var done = false
     var sigs: DataFrame = null
     try {
-      val out = runStages(spark, cfg, membersPart, membersFut,
+      val out = runStages(spark, cfg, keyedRead, membersPart, membersFut,
         s => sigs = s, reps)
       done = true
       out
@@ -415,6 +419,7 @@ object DedupPipeline {
     * for failure-path unpersist.
     */
   private def runStages(spark: SparkSession, cfg: DedupConfig,
+                        keyedRead: () => Unit,
                         membersPart: DataFrame,
                         membersFut: java.util.concurrent.Future[Long],
                         onSigs: DataFrame => Unit,
@@ -450,25 +455,29 @@ object DedupPipeline {
       .persist(bigCacheLevel)
     onSigs(sigs)
     val cand = candidates(sigs, cfg)
-    // Edge list materialized once by an eager localCheckpoint: CC scans it
-    // three times (edges + both vertex columns). Unlike persist(), a
-    // checkpoint runs through AQE, so it lands in data-sized partitions
-    // instead of the verify join's 128 (cached plans bypass coalescing).
-    // The ContextCleaner frees its blocks once the frame goes out of scope.
+    keyedRead() // the bucket checkpoint filled sigs
+    // Edge list materialized once by an eager localCheckpoint, in a job of
+    // its own, so the verify join's work is not charged to CC's collect.
+    // Unlike persist(), a checkpoint runs through AQE, so it lands in
+    // data-sized partitions instead of the verify join's 128 (cached plans
+    // bypass coalescing).
     sc.setJobDescription("dedup: verify edges materialize")
     val edges = verifiedEdges(sigs, cand, cfg)
       .select(col("uid_a").as("src"), col("uid_b").as("dst"))
       .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK)
+    // Each frame's blocks are dropped once its last reader has run, not when
+    // the driver's GC lets Spark's cleaner find them: a drain runs its days
+    // back to back, and a day's leftovers would still be on the scratch disk
+    // while the next day runs.
+    sigs.unpersist()
+    releaseCheckpoints(cand, sigs)
 
     // Only vertices that appear in at least one edge can be in a >=2
     // component; everything else is a singleton and drops out — keeps the
     // CC working set at the number of *duplicated* docs, not corpus size.
-    // No distinct(): CC interns ids on the driver, so a distinct here would
-    // be one full extra edge-list exchange of pure overhead.
-    val vertices = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id")))
-
-    val comps = ConnectedComponents.run(spark, vertices, edges)
+    // So CC collects the edges alone (32 B per edge).
+    val comps = ConnectedComponents.run(spark, edges)
+    releaseCheckpoints(edges, sigs)
 
     // ---- fan exact-dup members back in --------------------------------
     // component(row) = CC component of its representative, or the rep uid
@@ -488,11 +497,18 @@ object DedupPipeline {
     // downstream ordering) all consume it more than once.
     sc.setJobDescription("dedup: assign + keepers")
     val out = splitAndSelectKeepers(assigned, cfg).localCheckpoint(eager = true)
-    // edges is a localCheckpoint — its blocks are freed by the
-    // ContextCleaner once the frame goes out of scope (no unpersist handle)
-    sigs.unpersist()
     membersPart.unpersist()
     out
+  }
+
+  /** Drops the blocks of the local checkpoints that `df` reads and
+    * `upstream` does not: the ones taken since `upstream` was built, never
+    * a caller's. */
+  private def releaseCheckpoints(df: DataFrame, upstream: DataFrame): Unit = {
+    def checkpoints(d: DataFrame) = d.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.toSet
+    (checkpoints(df) -- checkpoints(upstream)).foreach(_.unpersist(blocking = false))
   }
 
   /** The reference's post-CC steps: drop <2 components, split >maxGroupSize

@@ -183,19 +183,35 @@ object Checkpoint {
 
     /** Take `p` for `owner`: a fresh file of another owner is [[Held]]; a
       * stale one is reaped first; the atomic create decides among racers.
+      *
+      * Only one taker reaps a given stale file: the one that creates its
+      * claim, a sibling named after the stale content. The rest lose
+      * without moving `p`. Otherwise a taker that read the stale content
+      * just before another reaped it and created a fresh file would move
+      * that fresh file aside, and a third taker could create `p` in the gap
+      * before it is put back: two takers would both hold `p`. A claim left
+      * by a taker that died holding it goes stale like any lease file.
       */
     def take(p: Path, owner: String, ttlMs: Long, nowMs: Long): Take = {
       Files.createDirectories(p.getParent)
+      val mine = s"$owner|$nowMs|$nowMs"
       val reaped = read(p) match {
         case None => None
         case Some(cur) if !stale(p, cur, ttlMs, nowMs) => return Held(cur)
-        case Some(cur) => moveAside(p, _ == cur) match {
-          case Removed(old) => Some(old)
-          case Refused(c, restored) => return Lost(None, Option.when(!restored)(c))
-          case Absent => None // another reaper won; the create decides
-        }
+        case Some(cur) =>
+          val claim = p.resolveSibling(
+            s".${p.getFileName}.reap.${java.util.UUID.nameUUIDFromBytes(cur.getBytes("UTF-8"))}")
+          val claimed = create(claim, mine) || read(claim).exists(c =>
+            stale(claim, c, ttlMs, nowMs) && moveAside(claim, _ == c).isInstanceOf[Removed] &&
+              create(claim, mine))
+          if (!claimed) return Lost(None, None)
+          try moveAside(p, _ == cur) match {
+            case Removed(old) => Some(old)
+            case Refused(c, restored) => return Lost(None, Option.when(!restored)(c))
+            case Absent => None // the owner released it; the create decides
+          } finally Files.deleteIfExists(claim): Unit
       }
-      if (create(p, s"$owner|$nowMs|$nowMs")) Taken(reaped) else Lost(reaped, None)
+      if (create(p, mine)) Taken(reaped) else Lost(reaped, None)
     }
 
     /** Replace `owner`'s file with `content`. False iff `owner` no longer

@@ -78,4 +78,13 @@ class PlanSpec extends AnyFunSuite {
     val plan = planOf(DedupPipeline.signatures(pages, DedupConfig()))
     assert(!plan.contains("Exchange"), s"unexpected shuffle in signatures:\n$plan")
   }
+
+  test("signatures projection calls the kernel UDF once per row") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    val pages = PagesGen.generate(spark, 100, nDomains = 5, seed = 6L)
+    val plan = DedupPipeline.signatures(pages, DedupConfig()).queryExecution.executedPlan
+    val udfs = plan.collect { case node => node.expressions.flatMap(_.collect { case u: ScalaUDF => u }) }
+      .flatten
+    assert(udfs.size == 1, s"expected one kernel ScalaUDF, found ${udfs.size}:\n$plan")
+  }
 }

@@ -99,6 +99,29 @@ class Round3Spec extends AnyFunSuite {
     assert(leaseWins == 1, s"day double-owned: $leaseWins concurrent leases")
   }
 
+  test("one taker reaps a stale lease: a live reap claim stops the rest, a dead one goes stale") {
+    import java.nio.file.{Files, Paths}
+    val root = freshRoot()
+    val dir = Paths.get(s"$root/locks/days/cfg")
+    Files.createDirectories(dir)
+    val stale = "dead-worker|1000|1000"
+    Files.writeString(dir.resolve("2026-01-01.lease"), stale)
+    val claim = dir.resolve(".2026-01-01.lease.reap." +
+      java.util.UUID.nameUUIDFromBytes(stale.getBytes("UTF-8")))
+    def take(w: String) =
+      Checkpoint.tryAcquireDayLease(root, "cfg", "2026-01-01", w, staleTtlMs = 60000L)
+    // another taker is reaping this stale lease right now: back off, touch nothing
+    Files.writeString(claim, s"live-reaper|${System.currentTimeMillis()}|${System.currentTimeMillis()}")
+    assert(!take("w1"))
+    assert(Files.readString(dir.resolve("2026-01-01.lease")) == stale)
+    // that taker died holding its claim: the claim goes stale and is reaped too
+    Files.writeString(claim, "dead-reaper|1000|1000")
+    assert(take("w2"))
+    assert(Files.readString(dir.resolve("2026-01-01.lease")).startsWith("w2|"))
+    val left = Files.list(dir).toArray.map(_.toString.split('/').last).toSeq
+    assert(left == Seq("2026-01-01.lease"), s"debris left: $left")
+  }
+
   test("two concurrent day-lease workers drain disjoint days; union == plan") {
     import scala.jdk.CollectionConverters._
     val pages = PagesGen.generate(spark, 700, nDomains = 20, nDays = 6, seed = 6L)
@@ -263,11 +286,13 @@ class Round3Spec extends AnyFunSuite {
       assert(java.lang.Double.doubleToRawLongBits(d) == java.lang.Double.doubleToRawLongBits(s),
         s"cosine mismatch $d vs $s for pair (${a.take(20)}, ${b.take(20)})")
     }
-    // expression level (codegen path), against the kernel
+    // expression level (codegen path, over the pipeline's signature UDF),
+    // against the kernel
     import spark.implicits._
+    def svec(c: String) = graft.functions.Fns.signaturesUdf(3, 128, 42L)(col(c)).getField("svec")
     val df = pairs.toDF("a", "b")
-      .withColumn("sa", graft.functions.Fns.embedSparseUdf(col("a")))
-      .withColumn("sb", graft.functions.Fns.embedSparseUdf(col("b")))
+      .withColumn("sa", svec("a"))
+      .withColumn("sb", svec("b"))
       .withColumn("cos", graft.functions.Fns.cosineSparseCol(col("sa"), col("sb")))
       .select("a", "b", "cos").collect()
     df.foreach { r =>

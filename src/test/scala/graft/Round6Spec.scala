@@ -17,12 +17,14 @@ class Round6Spec extends AnyFunSuite {
 
   test("simHash128 low half is bit-identical to simHash; high half is " +
     "independent and deterministic") {
+    // simHash is simHash128's low half, so both halves are checked against
+    // the per-bit majority oracle instead
     val rnd = new scala.util.Random(6)
     (0 until 200).foreach { _ =>
       val sh = Array.fill(1 + rnd.nextInt(400))(rnd.nextLong())
       val s128 = MinHash.simHash128(sh)
-      assert(s128(0) == MinHash.simHash(sh),
-        "low half must equal the canonical 64-bit SimHash")
+      assert(s128.toSeq == KernelOracle.simHash128(sh).toSeq,
+        "both halves must equal the per-bit majority oracle")
       assert(java.util.Arrays.equals(s128, MinHash.simHash128(sh)),
         "simHash128 must be deterministic")
     }
@@ -69,12 +71,17 @@ class Round6Spec extends AnyFunSuite {
 
   // ------------------------------------------------ connected components
 
+  /** Labels from the three-argument form, which must equal the
+    * edges-only form's when the vertices are the edge endpoints. */
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     val e = edges.toDF("src", "dst")
     val v = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-    ConnectedComponents.run(spark, v, e)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val out = labels(ConnectedComponents.run(spark, v, e))
+    assert(labels(ConnectedComponents.run(spark, e)) == out, "edges-only form differs")
+    out
   }
 
   test("CC with fused convergence check: clique, path, two components") {
