@@ -66,13 +66,13 @@ final case class DedupConfig(
       * edge (north-rule recall bar: 0.99). Set < 0 to disable.
       */
     simhashPregateMaxHamming: Int = 23,
-    /** 128-bit SimHash hamming pre-gate (round-6 optimization), applied on
-      * top of the 64-bit gate: a candidate pair must ALSO satisfy
-      * hamming128(a, b) <= this, where hamming128 sums the 64-bit hamming
-      * and the hamming of the independent high half
-      * ([[graft.core.MinHash.simHash128]]). Doubling the bits doubles the
-      * true/noise mean separation in noise-sigma units, so at equal recall
-      * this gate rejects most of the noise the 64-bit gate at 23 admits —
+    /** 128-bit SimHash hamming pre-gate, applied on top of the 64-bit
+      * gate: a candidate pair must ALSO satisfy hamming128(a, b) <= this,
+      * where hamming128 sums the 64-bit hamming and the hamming of the
+      * independent high half ([[graft.core.MinHash.simHash128]]).
+      * Doubling the bits doubles the true/noise mean separation in
+      * noise-sigma units, so at equal recall this gate rejects most of
+      * the noise the 64-bit gate at 23 admits —
       * the verify join's pair exchange is the pipeline's largest shuffle
       * and was majority-noise at gate 23 (`Probe pairmass`, 2 M docs).
       * Evidence for the default (`Probe pairmass`, 2 M-doc bench corpus):
@@ -134,9 +134,13 @@ object DedupPipeline {
     * (LSH self-join, verify, CC) moves 16 bytes instead of a ~60-byte url
     * string; collision probability at the 10^12-doc design point is
     * ~1e-15. The url is joined back only at the final assignment step.
+    * With a `day`, the url is hashed together with it, so a url seen on
+    * two days is two vertices.
     */
-  private def uidOf(url: Column): Column =
-    struct(xxhash64(url).as("h1"), xxhash64(url, lit(0x9E3779B9L)).as("h2"))
+  private def uidOf(url: Column, day: Seq[Column] = Nil): Column = {
+    val key = url +: day
+    struct(xxhash64(key: _*).as("h1"), xxhash64(key :+ lit(0x9E3779B9L): _*).as("h2"))
+  }
 
   /** 128-bit content hash for the exact pre-collapse grouping. */
   private def chashOf(text: Column): Column =
@@ -149,9 +153,7 @@ object DedupPipeline {
     */
   def signatures(pages: DataFrame, cfg: DedupConfig,
                  withText: Boolean = false): DataFrame = {
-    val base = pages
-      .select(col("url"), col("warc_ts"), col("text"))
-      .withColumn("sig", Fns.signaturesUdf(cfg.shingleK, cfg.numHashes, cfg.seed)(col("text")))
+    val base = withKernel(pages.select(col("url"), col("warc_ts"), col("text")), cfg)
     val cols = Seq(
       uidOf(col("url")).as("uid"),
       col("url"), col("warc_ts"),
@@ -162,6 +164,30 @@ object DedupPipeline {
       col("sig.nShingles").as("n_shingles"),
       col("sig.svec").as("svec")) ++ (if (withText) Seq(col("text")) else Nil)
     base.select(cols: _*)
+  }
+
+  /** `pages` plus the struct `sig` of every kernel value, from one call of
+    * [[Fns.signaturesUdf]] per row. */
+  private def withKernel(pages: DataFrame, cfg: DedupConfig): DataFrame =
+    pages.withColumn("sig", Fns.signaturesUdf(cfg.shingleK, cfg.numHashes, cfg.seed)(col("text")))
+
+  /** The pipeline's signature cache: only the columns its later stages read.
+    * uid, simhash and simhash2 feed the bucket rows and the gates; `bands`,
+    * the `cfg.bands` LSH band hashes, stands in for the `numHashes`-long
+    * MinHash (a quarter of its bytes at the defaults); svec feeds the verify
+    * join. The text rides along only for the LCS layer, and the day only in
+    * a day-keyed call, where it is part of the uid and of the bucket key.
+    */
+  private def signatureCache(reps: DataFrame, cfg: DedupConfig,
+                             day: Seq[Column]): DataFrame = {
+    val cols = Seq(
+      uidOf(col("url"), day).as("uid"),
+      col("sig.simhash").as("simhash"),
+      col("sig.simhash2").as("simhash2"),
+      Fns.lshBucketsUdf(cfg.bands)(col("sig.minhash")).as("bands"),
+      col("sig.svec").as("svec")) ++
+      (if (cfg.lcsMinRatio > 0) Seq(col("text")) else Nil) ++ day
+    withKernel(reps, cfg).select(cols: _*)
   }
 
   /** Candidate pairs from LSH banding: (uid_a, uid_b, simhash_hamming) with
@@ -204,35 +230,43 @@ object DedupPipeline {
     * + 2x262 MB at 600k docs; now one 700 MB write). The checkpoint blocks
     * (~50 B/bucket-row) are freed by the ContextCleaner once the run's
     * frames go out of scope.
+    *
+    * `sigs` is either [[signatures]] (band hashes derived from `minhash`
+    * here) or the pipeline's own cache, which carries them as `bands`. When
+    * it carries a `day`, the bucket key is (day, band, bucket): the df-cap
+    * counts and the join pair docs of one day only.
     */
   private[graft] def candidatesRaw(sigs: DataFrame, cfg: DedupConfig,
                                    emitHamming128: Boolean = false): DataFrame = {
     val gate128 = cfg.simhash128PregateMaxHamming >= 0
+    val cached = sigs.columns.contains("bands")
+    val dayKey = sigs.columns.filter(_ == "day").toSeq
+    val key = dayKey ++ Seq("band", "bucket")
     val bucketCols = Seq(col("uid"), col("simhash")) ++
-      (if (gate128 || emitHamming128) Seq(col("simhash2")) else Nil) ++
-      Seq(posexplode(Fns.lshBucketsUdf(cfg.bands)(col("minhash"))))
+      (if (gate128 || emitHamming128) Seq(col("simhash2")) else Nil) ++ dayKey.map(col) ++
+      Seq(posexplode(if (cached) col("bands") else Fns.lshBucketsUdf(cfg.bands)(col("minhash"))))
     sigs.sparkSession.sparkContext.setJobDescription("dedup: bucket checkpoint")
     val buckets0 = sigs
-      .filter(col("minhash").isNotNull)
+      .filter(col(if (cached) "bands" else "minhash").isNotNull)
       .select(bucketCols: _*)
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
-      .repartition(col("band"), col("bucket"))
+      .repartition(key.map(col): _*)
       // bigCacheLevel (DISK_ONLY): ~GBs of bucket rows held on-heap
       // are eviction bait for the self-join's sorts (same convoy as
       // `keyed`); tmpfs/SSD re-reads keep the pinned partitioning either way.
       .localCheckpoint(eager = true, bigCacheLevel)
     val buckets =
       if (cfg.maxBucketSize > 0)
-        SkewOps.capHotBuckets(buckets0, Seq(col("band"), col("bucket")), cfg.maxBucketSize)
+        SkewOps.capHotBuckets(buckets0, key.map(col), cfg.maxBucketSize)
       else buckets0
-    // Join strategy (round-6, measured): a SHUFFLE_HASH hint here was
-    // A/B-ed against the default SortMergeJoin at 600 k docs in a clean
-    // window — steady-state CPU within 1.5 % (1,065 vs 1,080 core-s for
-    // the whole pipeline). Both sides are the same checkpointed frame
-    // already partitioned by (band, bucket), so there is no exchange
-    // either way and the per-partition sorts of 12-byte keys are cheap;
-    // SMJ is kept for its graceful spill on a pathological partition
-    // (equal-size sides give the hash build no advantage).
+    // Join strategy: SortMergeJoin, not SHUFFLE_HASH. A SHUFFLE_HASH hint
+    // was A/B-ed against it at 600 k docs in a clean window — steady-state
+    // CPU within 1.5 % (1,065 vs 1,080 core-s for the whole pipeline). Both
+    // sides are the same checkpointed frame already partitioned by the
+    // bucket key, so there is no exchange either way and the per-partition
+    // sorts of 12-byte keys are cheap; SMJ is kept for its graceful spill on
+    // a pathological partition (equal-size sides give the hash build no
+    // advantage).
     val a = buckets.alias("a")
     val b = buckets.alias("b")
     // hamming128 = low-half hamming + independent-high-half hamming; the
@@ -242,8 +276,7 @@ object DedupPipeline {
     // further exchange; the h128 helper column is dropped pre-shuffle
     // unless a diagnostics caller (`Probe pairmass`) asks for it.
     val joined = a.join(b,
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
+        key.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
           col("a.uid") < col("b.uid"))
       .select(Seq(col("a.uid").as("uid_a"), col("b.uid").as("uid_b"),
         Fns.hammingCol(col("a.simhash"), col("b.simhash")).as("simhash_hamming")) ++
@@ -278,12 +311,12 @@ object DedupPipeline {
     val rhsCols = Seq(col("uid").as("uid_b"), col("svec").as("svec_b")) ++
       (if (diagnostics) Seq(col("url").as("url_b"), col("minhash").as("mh_b")) else Nil) ++
       (if (lcs) Seq(col("text").as("text_b")) else Nil)
-    // SHUFFLE_HASH on the pair-stream side (round-6): the default
-    // SortMergeJoin sorts the corpus-scale signature side AND the pair
-    // stream for each of the two probes; hashing the (narrow, post-128-bit-
-    // gate, hence small) pair side instead streams the 1.5 KB/row signature
-    // rows through unsorted — the structurally right build side per the
-    // optimization guide §3.1. Measured effect at 600 k steady state is
+    // SHUFFLE_HASH on the pair-stream side: the default SortMergeJoin
+    // sorts the corpus-scale signature side AND the pair stream for each
+    // of the two probes; hashing the (narrow, post-128-bit-gate, hence
+    // small) pair side instead streams the signature rows through
+    // unsorted — the structurally right build side per the optimization
+    // guide §3.1. Measured effect at 600 k steady state is
     // small (~1.5 % pipeline CPU together with the band-join variant, same
     // window A/B), kept because the asymmetry grows with corpus size (sig
     // rows sort O(n log n); the gate keeps pairs ~linear). Same rows out —
@@ -318,10 +351,31 @@ object DedupPipeline {
     * Docs not in any cluster (singletons) are omitted — the reference
     * returns only groups of >= 2.
     */
-  def run(spark: SparkSession, pages: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
+  def run(spark: SparkSession, pages: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    dedup(spark, pages, cfg, byDay = false)
+
+  /** [[run]] over every day of `pages` at once, each day on its own: the
+    * day of `warc_ts` ([[Fns.dayKey]]) is part of every key that decides a
+    * group — the exact pre-collapse key (day, chash), the uid (the url
+    * hashed with its day) and the LSH bucket key (day, band, bucket) — so
+    * no pair, exact group or component spans two days. The rows of each
+    * day are exactly what [[run]] over that day alone returns; the output
+    * columns are the same (the day is `Fns.dayKey(warc_ts)` of each row).
+    * One call pays the pipeline's fixed cost once for all its days; its
+    * driver-side CC envelope and scratch grow with the call's input.
+    */
+  def runDays(spark: SparkSession, pages: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    dedup(spark, pages, cfg, byDay = true)
+
+  private def dedup(spark: SparkSession, pages: DataFrame, cfg: DedupConfig,
+                    byDay: Boolean): DataFrame = {
     // the stages label their jobs; the caller's label is restored on exit
     val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
-    val projected = pages.select(col("url"), col("warc_ts"), col("text"))
+    // the day as days since the epoch: an int key, one-to-one with Fns.dayKey
+    val dayKey = if (byDay) Seq("day") else Nil
+    val day = dayKey.map(col)
+    val projected = pages.select(Seq(col("url"), col("warc_ts"), col("text")) ++
+      (if (byDay) Seq(unix_date(to_date(Fns.dayKey(col("warc_ts")))).as("day")) else Nil): _*)
 
     // ---- stage 0: exact pre-collapse ---------------------------------
     // groupBy(content hash) is skew-safe (map-side partial agg) and moves
@@ -332,9 +386,9 @@ object DedupPipeline {
     // so AQE sizes it at runtime and broadcasts it when the
     // duplicated-hash set is small (the common case) — then the text
     // crosses NO wire here at all; otherwise it crosses exactly once.
-    // (Round 3 shaped this as a join + a left-anti of the same full-text
-    // frame — the corpus text shuffled TWICE, and BENCH_r03 measured
-    // shuffle ≈ read at 49 KB/doc. This stage was the bulk of it.)
+    // (A join plus a left-anti of the same full-text frame would shuffle
+    // the corpus text twice: BENCH_r03 measured shuffle ≈ read at 49 KB/doc
+    // in that shape.)
     // n_chars is computed MAP-SIDE here so the member-rows plan below
     // never needs the text column: its copy of the join shuffles only
     // (chash, url, warc_ts, n_chars) — ~90 B/row, not the document.
@@ -351,16 +405,17 @@ object DedupPipeline {
     val keyed = projected.withColumn("chash", chashOf(col("text")))
       .withColumn("n_chars", length(col("text")))
       .persist(bigCacheLevel)
-    val dupGroups = keyed.groupBy(col("chash"))
+    val exactKey = dayKey :+ "chash"
+    val dupGroups = keyed.groupBy(exactKey.map(col): _*)
       .agg(min(col("url")).as("rep_url"), count(lit(1)).as("grp_n"))
       .filter(col("grp_n") >= 2)
-    val reps = keyed.join(dupGroups, Seq("chash"), "left")
+    val reps = keyed.join(dupGroups, exactKey, "left")
       .filter(col("rep_url").isNull || col("url") === col("rep_url"))
-      .select(col("url"), col("warc_ts"), col("text"))
+      .select((Seq("url", "text") ++ dayKey).map(col): _*)
     // (url, warc_ts, n_chars, rep_uid, exact_grp_n) for every input row
-    val members = keyed.drop("text").join(dupGroups, Seq("chash"), "left")
+    val members = keyed.drop("text").join(dupGroups, exactKey, "left")
       .select(col("url"), col("warc_ts"), col("n_chars"),
-        uidOf(coalesce(col("rep_url"), col("url"))).as("rep_uid"),
+        uidOf(coalesce(col("rep_url"), col("url")), day).as("rep_uid"),
         coalesce(col("grp_n"), lit(1L)).as("exact_grp_n"))
 
     // `members` does not depend on stages 1-4, but left lazy it is
@@ -394,12 +449,12 @@ object DedupPipeline {
     // If any stage below throws (candidate/verify/CC failure), cancel the
     // background members job and release every cache before rethrowing —
     // otherwise the count keeps running unobserved and the four persisted
-    // frames leak for the life of the session (round-5 ADVICE).
+    // frames leak for the life of the session.
     var done = false
     var sigs: DataFrame = null
     try {
       val out = runStages(spark, cfg, keyedRead, membersPart, membersFut,
-        s => sigs = s, reps)
+        s => sigs = s, reps, day)
       done = true
       out
     } finally {
@@ -414,7 +469,7 @@ object DedupPipeline {
   }
 
   /** Stages 1-5 (signatures -> candidates -> verify -> CC -> keepers) —
-    * split out of [[run]] so its error path can clean up the caches in one
+    * split out of [[dedup]] so its error path can clean up the caches in one
     * place. `onSigs` hands the persisted signature frame back to the caller
     * for failure-path unpersist.
     */
@@ -423,7 +478,8 @@ object DedupPipeline {
                         membersPart: DataFrame,
                         membersFut: java.util.concurrent.Future[Long],
                         onSigs: DataFrame => Unit,
-                        reps: DataFrame): DataFrame = {
+                        reps: DataFrame,
+                        day: Seq[Column]): DataFrame = {
     // ---- stages 1-4 over representatives ------------------------------
     // Multi-consumer caches must be FULLY materialized before any job fans
     // out over them: consumers' stages otherwise run concurrently inside
@@ -439,20 +495,19 @@ object DedupPipeline {
     // just as completely without the extra pass + barrier.
     // (keyed's three consumers race too, but its recompute is one cheap
     // hash pass — not worth a barrier; sigs carries the UDF work.)
-    // bigCacheLevel for the same reason as `keyed` above: ~1.5 KB/doc of
-    // signature arrays is gigabytes at bench scale, and every byte held
+    // bigCacheLevel for the same reason as `keyed` above: the embeddings
+    // and band hashes are gigabytes at bench scale, and every byte held
     // on-heap is eviction bait for the candidate stage's sorts. Both
     // consumers (bucket explode, verify join) scan it sequentially —
     // serialized re-reads are cheap.
     val sc = spark.sparkContext
-    // sigs is persisted but NOT eagerly counted (round-6 barrier cut): its
-    // FIRST consumer is the bucket checkpoint inside candidatesRaw — a
-    // single-consumer job, so there is no concurrent-recompute race to
-    // barrier against, and that job's scan fills the cache for the verify
-    // join's two later reads. The old sigs.count() was one full extra pass
-    // over the corpus-scale cache plus a serial barrier (fixed cost F).
-    val sigs = signatures(reps, cfg, withText = cfg.lcsMinRatio > 0)
-      .persist(bigCacheLevel)
+    // sigs is persisted but NOT eagerly counted: its FIRST consumer is the
+    // bucket checkpoint inside candidatesRaw — a single-consumer job, so
+    // there is no concurrent-recompute race to barrier against, and that
+    // job's scan fills the cache for the verify join's two later reads. A
+    // sigs.count() would be one full extra pass over the corpus-scale cache
+    // plus a serial barrier (fixed cost F).
+    val sigs = signatureCache(reps, cfg, day).persist(bigCacheLevel)
     onSigs(sigs)
     val cand = candidates(sigs, cfg)
     keyedRead() // the bucket checkpoint filled sigs

@@ -476,17 +476,59 @@ object Checkpoint {
         sum(col("elapsedMs")).as("elapsed_ms"))
   }
 
+  /** Input docs per pipeline call of a sequential drain. Consecutive days
+    * share a call up to this bound and a day is never split, so at
+    * production day sizes each day is still its own call: the driver-side
+    * CC envelope (~32 M edges per call, SCALE.md) and the per-call scratch
+    * are those of one day.
+    */
+  private val BatchDocs = 1000000L
+
+  /** `days` (each with its doc count) cut into runs of consecutive days of
+    * at most `maxDocs` docs, in order; a day over the bound is a batch of
+    * its own.
+    */
+  private[graft] def batches(days: Seq[(String, Long)], maxDocs: Long): Seq[Seq[String]] =
+    days.foldLeft(Vector.empty[(Vector[String], Long)]) {
+      case (init :+ ((batch, n)), (day, k)) if n + k <= maxDocs => init :+ ((batch :+ day, n + k))
+      case (acc, (day, k)) => acc :+ ((Vector(day), k))
+    }.map(_._1)
+
+  /** `total` split in proportion to `weights`, in whole units that sum to
+    * `total` exactly.
+    */
+  private[graft] def splitByShare(total: Long, weights: Seq[Long]): Seq[Long] = {
+    val bounds = weights.scanLeft(0L)(_ + _).map(c => total * c / weights.sum)
+    bounds.zip(bounds.tail).map { case (a, b) => b - a }
+  }
+
+  /** Doc count and order-insensitive fingerprint of the input keys
+    * (bit_xor, not sum — overflow-free under ANSI mode).
+    */
+  private val inputStats = Seq(count(lit(1)), expr("bit_xor(xxhash64(url, warc_ts))"))
+
   /** Process every day partition of `pages` not yet checkpointed; returns
     * the list of days processed this run.
     *
     * Ordering: retry-eligible gap days first (oldest first), then fresh
     * days — the reference's backfill-before-fresh drain order.
     *
+    * A sequential drain sends its days through [[DedupPipeline.runDays]],
+    * consecutive days batched up to [[BatchDocs]] input docs per call, and
+    * commits each batch with one partitioned output write, one `metrics`
+    * append and, last, one `checkpoints` append. Each `output/day=<d>` holds
+    * exactly the rows a per-day [[DedupPipeline.run]] gives; a day's
+    * `elapsedMs` is its input share of the batch's time. If a batched call
+    * throws, its days rerun one by one, so a bad day still costs one day.
+    *
     * `lockTtlMs > 0` enables the single-writer lock with that staleness
     * TTL. `failAfter` injects a hard crash after N partitions (kill/rerun
     * fixture — no gap row, lock left dangling, exactly like a real crash).
     * `failDays` injects a per-day processing failure that exercises the
-    * soft path: gap row recorded, remaining days continue.
+    * soft path: gap row recorded, remaining days continue. A day lease is
+    * taken right before the call that runs its day; with batching, that
+    * call may run up to [[BatchDocs]] docs, so `dayLeaseTtlMs` must cover it.
+    * `maxParallelDays > 1` runs one pipeline call per day, from a pool.
     *
     * `failAfter` and `maxParallelDays > 1` are mutually exclusive BY
     * DESIGN, not by implementation accident: "crash after exactly N
@@ -510,8 +552,9 @@ object Checkpoint {
       "failAfter crash injection is defined for sequential drains only")
     val cfgHash = configHash(cfg)
     val sc = spark.sparkContext
-    // each day's jobs are labelled `checkpoint: <day>`; the caller's label is
-    // restored on exit (the sequential drain runs on the caller's thread)
+    // a call's jobs are labelled `checkpoint: <day>[,<day>...]`; the
+    // caller's label is restored on exit (the sequential drain runs on the
+    // caller's thread)
     val callerDescription = sc.getLocalProperty("spark.job.description")
     val runId =
       if (lockTtlMs > 0) acquireLock(spark, root, cfgHash, lockTtlMs) else ""
@@ -520,7 +563,11 @@ object Checkpoint {
 
     try {
       val withDay = pages.withColumn("day", Fns.dayKey(col("warc_ts")))
-      val allDays = withDay.select("day").distinct().collect().map(_.getString(0)).sorted
+      // every day's input stats in one job: they size the batches and fill
+      // the batched days' metrics rows
+      val dayIn = withDay.groupBy(col("day")).agg(inputStats.head, inputStats.tail: _*)
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val allDays = dayIn.keys.toSeq.sorted
       val done = completedDays(spark, root, cfgHash)
       val gapDays = openGapDays(spark, root, cfgHash).filter(allDays.contains)
       // a backed-off gap day is skipped this run entirely — excluded from
@@ -531,72 +578,106 @@ object Checkpoint {
         .filterNot(blocked)
       val todo = (gapDays ++ fresh).distinct
 
-      // one day's full drain: lease -> process -> metrics -> checkpoint row
-      // (commit point) -> heartbeat. Returns true iff the day COMPLETED.
-      // Thread-safe by construction: atomicAppend writes unique scratch
-      // dirs, leases/locks are atomic files, and every Spark job here is
-      // independent — so N days can drain concurrently inside one driver.
-      def processDay(day: String): Boolean = {
-        // cooperating-worker mode: skip days another live worker has leased
-        val leased = dayLeaseTtlMs <= 0 ||
-          tryAcquireDayLease(root, cfgHash, day, workerId, dayLeaseTtlMs)
+      // cooperating-worker mode: skip days another live worker has leased.
+      // On success the lease is deliberately kept: it marks the day done
+      // for workers whose todo list predates this commit (their stale plan
+      // would otherwise re-lease and re-process the day). A kept lease past
+      // its TTL is inert — the COMPLETED checkpoint row excludes the day
+      // from every future todo.
+      def lease(day: String): Boolean = dayLeaseTtlMs <= 0 ||
+        tryAcquireDayLease(root, cfgHash, day, workerId, dayLeaseTtlMs)
+
+      // soft failure: ledger the day with a retry-after and continue;
+      // release the lease so another worker may retry the day
+      def fail(day: String, e: Exception): Unit = {
+        recordGap(spark, root, day, cfgHash, e.getMessage,
+          System.currentTimeMillis() + retryBackoffMs)
+        if (dayLeaseTtlMs > 0) releaseDayLease(root, cfgHash, day, workerId)
+      }
+
+      // metrics rows, then the checkpoint rows LAST — the commit point of
+      // their days. Thread-safe: atomicAppend writes unique scratch dirs.
+      def commit(rows: Seq[RunMetrics]): Unit = {
+        import spark.implicits._
+        atomicAppend(rows.toDF(), root, "metrics")
+        val at = System.currentTimeMillis()
+        atomicAppend(rows.map(m => (m.day, cfgHash, "COMPLETED", at))
+          .toDF("day", "configHash", "status", "committedAtMs"), root, "checkpoints")
+      }
+
+      // one leased day through DedupPipeline.run: process -> output ->
+      // metrics -> checkpoint row. True iff the day COMPLETED. Every Spark
+      // job here is independent, so N days can run concurrently.
+      def runDay(day: String): Boolean = {
         val t0 = System.currentTimeMillis()
         sc.setJobDescription(s"checkpoint: $day")
-        val completed = if (!leased) false else try {
+        try {
           if (failDays.contains(day))
             throw new RuntimeException(s"injected day failure for $day")
           val dayPages = withDay.filter(col("day") === day).drop("day")
-          // lineage: order-insensitive fingerprint of the partition's input
-          // keys (bit_xor, not sum — overflow-free under ANSI mode)
-          val in = dayPages.agg(count(lit(1)),
-            expr("bit_xor(xxhash64(url, warc_ts))")).first()
-          val (nIn, fp) = (in.getLong(0), in.getLong(1))
+          val in = dayPages.agg(inputStats.head, inputStats.tail: _*).first()
           val clusters = DedupPipeline.run(spark, dayPages, cfg)
           // cluster_id is a sha1, never null, so countDistinct counts every cluster
           val out = clusters.agg(count(lit(1)), countDistinct(col("cluster_id"))).first()
           val (nClustered, nClusters) = (out.getLong(0), out.getLong(1))
           clusters.write.mode(SaveMode.Overwrite).parquet(s"$root/output/day=$day")
-          val m = RunMetrics(day, cfgHash, nIn, nClustered, nClusters,
-            nClustered - nClusters, System.currentTimeMillis() - t0, fp,
-            "COMPLETED", t0)
-          import spark.implicits._
-          atomicAppend(Seq(m).toDF(), root, "metrics")
-          // checkpoint row LAST — commit point of the partition
-          atomicAppend(
-            Seq((day, cfgHash, "COMPLETED", System.currentTimeMillis()))
-              .toDF("day", "configHash", "status", "committedAtMs"),
-            root, "checkpoints")
+          commit(Seq(RunMetrics(day, cfgHash, in.getLong(0), nClustered, nClusters,
+            nClustered - nClusters, System.currentTimeMillis() - t0, in.getLong(1),
+            "COMPLETED", t0)))
           true
-        } catch {
-          case e: Exception =>
-            // soft failure: ledger the day with a retry-after and continue;
-            // release the lease so another worker may retry the day
-            recordGap(spark, root, day, cfgHash, e.getMessage,
-              System.currentTimeMillis() + retryBackoffMs)
-            if (dayLeaseTtlMs > 0) releaseDayLease(root, cfgHash, day, workerId)
-            false
-        }
-        // on SUCCESS the lease is deliberately kept: it marks the day done
-        // for workers whose todo list predates this commit (their stale
-        // plan would otherwise re-lease and re-process the day). A kept
-        // lease past its TTL is inert — the COMPLETED checkpoint row
-        // excludes the day from every future todo.
-        if (runId.nonEmpty) heartbeat(root, cfgHash, runId)
-        completed
+        } catch { case e: Exception => fail(day, e); false }
       }
+
+      // leased days through one DedupPipeline.runDays call; returns the
+      // days that COMPLETED
+      def runBatch(days: Seq[String]): Seq[String] = {
+        val t0 = System.currentTimeMillis()
+        sc.setJobDescription(s"checkpoint: ${days.mkString(",")}")
+        try {
+          val clusters = DedupPipeline.runDays(spark,
+            withDay.filter(col("day").isin(days: _*)).drop("day"), cfg)
+          val day = Fns.dayKey(col("warc_ts"))
+          val out = clusters.groupBy(day)
+            .agg(count(lit(1)), countDistinct(col("cluster_id")))
+            .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+          // dynamic overwrite replaces exactly the days written, as the
+          // per-day overwrite does; a day without clusters gets an empty one
+          clusters.withColumn("day", day).write.mode(SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic").partitionBy("day")
+            .parquet(s"$root/output")
+          days.filterNot(out.contains).foreach { d =>
+            clusters.limit(0).write.mode(SaveMode.Overwrite).parquet(s"$root/output/day=$d")
+          }
+          val elapsed = splitByShare(System.currentTimeMillis() - t0, days.map(dayIn(_)._1))
+          commit(days.zip(elapsed).map { case (d, ms) =>
+            val ((nIn, fp), (nClustered, nClusters)) = (dayIn(d), out.getOrElse(d, (0L, 0L)))
+            RunMetrics(d, cfgHash, nIn, nClustered, nClusters, nClustered - nClusters, ms, fp,
+              "COMPLETED", t0)
+          })
+          days
+        } catch { case _: Exception => days.filter(runDay) }
+      }
+
+      def heartbeatIfLocked(): Unit = if (runId.nonEmpty) heartbeat(root, cfgHash, runId)
 
       val out: Seq[String] =
         if (maxParallelDays <= 1) {
-          // sequential drain (gap days first — the reference's order)
-          var processed = 0
-          val acc = scala.collection.mutable.ArrayBuffer[String]()
-          todo.foreach { day =>
-            if (processed >= failAfter)
-              throw new RuntimeException(s"injected failure before partition $day")
-            if (processDay(day)) acc += day
-            processed += 1
-          }
-          acc.toSeq
+          // sequential drain (gap days first — the reference's order); the
+          // crash injection lets the plan's first `failAfter` days drain
+          val (now, later) = todo.splitAt(failAfter)
+          // injected failures get their gap rows before the batched calls
+          now.filter(failDays).foreach(d => if (lease(d)) runDay(d))
+          heartbeatIfLocked()
+          val completed = batches(now.filterNot(failDays).map(d => d -> dayIn(d)._1), BatchDocs)
+            .flatMap { batch =>
+              val leased = batch.filter(lease)
+              val ok = if (leased.isEmpty) Nil else runBatch(leased)
+              heartbeatIfLocked()
+              ok
+            }
+          if (later.nonEmpty)
+            throw new RuntimeException(s"injected failure before partition ${later.head}")
+          completed
         } else {
           // intra-run day parallelism: independent day jobs submitted from a
           // bounded pool — Spark's scheduler interleaves their stages, so
@@ -609,7 +690,11 @@ object Checkpoint {
           try {
             val futures = todo.map { day =>
               day -> pool.submit(new java.util.concurrent.Callable[Boolean] {
-                def call(): Boolean = processDay(day)
+                def call(): Boolean = {
+                  val ok = lease(day) && runDay(day)
+                  heartbeatIfLocked()
+                  ok
+                }
               })
             }
             futures.filter(_._2.get()).map(_._1)

@@ -21,10 +21,11 @@ class Round4Spec extends AnyFunSuite {
 
   // ---------------------------------------------- day-parallel incremental
 
-  /** Per day, the interval from the start of its first `checkpoint: <day>`
-    * job to the end of its last: `Checkpoint.runIncremental` labels a
-    * day's first job (the input count) and its last (the checkpoint row)
-    * so, and the pipeline jobs in between run inside that span.
+  /** Per day, the interval from the start of the first job of the call
+    * that ran it to the end of that call's last job:
+    * `Checkpoint.runIncremental` labels a call's first job and its last
+    * (the checkpoint rows) `checkpoint: <day>[,<day>...]`, and the pipeline
+    * jobs in between run inside that span.
     */
   private def daySpans(body: => Unit): Map[String, (Long, Long)] = {
     import org.apache.spark.scheduler._
@@ -54,9 +55,12 @@ class Round4Spec extends AnyFunSuite {
       sc.setJobDescription(null)
       assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally sc.removeSparkListener(listener)
-    val day = "checkpoint: (.+)".r
-    desc.asScala.toSeq.collect { case (id, day(d)) => d -> (starts.get(id), ends.get(id)) }
-      .groupBy(_._1).map { case (d, js) => d -> (js.map(_._2._1).min, js.map(_._2._2).max) }
+    val call = "checkpoint: (.+)".r
+    desc.asScala.toSeq.collect { case (id, call(ds)) => ds -> (starts.get(id), ends.get(id)) }
+      .groupBy(_._1).toSeq.flatMap { case (ds, js) =>
+        val span = (js.map(_._2._1).min, js.map(_._2._2).max)
+        ds.split(',').map(_ -> span)
+      }.toMap
   }
 
   private def overlapping(spans: Map[String, (Long, Long)]): Seq[(String, String)] =
@@ -86,10 +90,11 @@ class Round4Spec extends AnyFunSuite {
         .orderBy("url").collect().map(_.toString).toSeq
       assert(x == y, s"day $d outputs differ between sequential and parallel")
     }
-    // every day is seen in both drains; the sequential one never has two
-    // days in flight, the parallel one does
+    // every day is seen in both drains; the sequential one runs all six in
+    // one pipeline call, the parallel one a call per day, two in flight
     assert(seqSpans.keySet == a.toSet && parSpans.keySet == a.toSet)
-    assert(overlapping(seqSpans).isEmpty, s"sequential days overlap: $seqSpans")
+    assert(seqSpans.values.toSet.size == 1, s"sequential drain took several calls: $seqSpans")
+    assert(parSpans.values.toSet.size == a.size, s"parallel drain batched days: $parSpans")
     assert(overlapping(parSpans).nonEmpty, s"no two days' jobs overlap: $parSpans")
   }
 

@@ -1,9 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
-import graft.operators.{DedupConfig, Multimodal}
+import graft.operators.{DedupConfig, DedupPipeline, Multimodal}
 import graft.runtime.Checkpoint
 import graft.sources.PagesGen
 
@@ -86,6 +87,112 @@ class RuntimeSpec extends AnyFunSuite {
       assert(m.getAs[Long]("nClusters") == nClusters, day)
       assert(m.getAs[Long]("nDuplicatesRemoved") == nClustered - nClusters, day)
     }
+  }
+
+  private def daysOf(pages: DataFrame): Seq[String] =
+    pages.select(Fns.dayKey(col("warc_ts"))).distinct().collect().map(_.getString(0)).sorted.toSeq
+
+  private def onDay(pages: DataFrame, day: String): DataFrame =
+    pages.filter(Fns.dayKey(col("warc_ts")) === day)
+
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** A 3-day PagesGen crawl plus rows that a day-blind batch gets wrong: a
+    * url seen on two days, a text seen on two days, a near-duplicate pair
+    * split across two days, and a fourth day that forms no cluster.
+    */
+  private def trapPages(): DataFrame = {
+    import spark.implicits._
+    val gen = PagesGen.generate(spark, 600, nDomains = 30, nDays = 3, seed = 21L)
+      .select("url", "warc_ts", "text")
+    val days = daysOf(gen)
+    def clustered(day: String) = DedupPipeline.run(spark, onDay(gen, day))
+      .select("url").orderBy("url").first().getString(0)
+    def textOf(url: String) = gen.filter(col("url") === url).first().getAs[String]("text")
+    val (x, y) = (clustered(days(0)), clustered(days(1)))
+    val lonely = gen.join(DedupPipeline.run(spark, onDay(gen, days(2))), Seq("url"), "left_anti")
+      .filter(Fns.dayKey(col("warc_ts")) === days(2)).orderBy("url").first().getAs[String]("text")
+    val day3 = java.time.LocalDate.parse(days(2)).plusDays(1).toString
+    val planted = Seq(
+      (x, days(1), textOf(y) + " trap"),           // x's url a day later, near y
+      ("https://trap.example/text-twin", days(2), textOf(x)), // x's text on another day
+      ("https://trap.example/near-a", days(1), lonely + " trap"), // near-dup of a day-2 doc
+      ("https://trap.example/alone-1", day3, "one lonely page about harbour cranes at dawn"),
+      ("https://trap.example/alone-2", day3, "quite another story: sourdough starters and rye"))
+      .toDF("url", "day", "text")
+      .select(col("url"), to_timestamp(concat(col("day"), lit(" 12:00:00"))).as("warc_ts"), col("text"))
+    gen.union(planted)
+  }
+
+  test("batched drain: each day's output and metrics equal the per-day path's") {
+    val pages = trapPages().cache()
+    try {
+      val days = daysOf(pages)
+      assert(days.size == 4)
+      // the traps bite: one day-blind call over every day gives other rows
+      assert(rowsOf(DedupPipeline.run(spark, pages)) !=
+        days.flatMap(d => rowsOf(DedupPipeline.run(spark, onDay(pages, d)))).sorted)
+
+      val batched = freshRoot()
+      val t0 = System.currentTimeMillis()
+      assert(Checkpoint.runIncremental(spark, pages, batched) == days)
+      val wallMs = System.currentTimeMillis() - t0
+      days.foreach { d =>
+        assert(rowsOf(spark.read.parquet(s"$batched/output/day=$d")) ==
+          rowsOf(DedupPipeline.run(spark, onDay(pages, d))), s"day $d")
+      }
+      // the no-cluster day still has a readable, empty output partition
+      assert(spark.read.parquet(s"$batched/output/day=${days(3)}").count() == 0)
+
+      // the same counts and fingerprints as one pipeline call per day
+      val perDay = freshRoot()
+      assert(Checkpoint.runIncremental(spark, pages, perDay, maxParallelDays = 2) == days)
+      def counts(root: String) = spark.read.parquet(s"$root/metrics")
+        .select("day", "nDocsIn", "inputFingerprint", "nClustered", "nClusters",
+          "nDuplicatesRemoved", "status")
+      assert(rowsOf(counts(batched)) == rowsOf(counts(perDay)))
+
+      // one batch: its time is split over its days by input share
+      val m = spark.read.parquet(s"$batched/metrics").orderBy("day").collect()
+      val elapsed = m.map(_.getAs[Long]("elapsedMs")).toSeq
+      assert(m.map(_.getAs[Long]("startedAtMs")).distinct.length == 1)
+      assert(elapsed.sum <= wallMs)
+      assert(elapsed == Checkpoint.splitByShare(elapsed.sum, m.map(_.getAs[Long]("nDocsIn")).toSeq))
+      assert(Checkpoint.usageRollup(spark, batched).first().getAs[Long]("elapsed_ms") == elapsed.sum)
+    } finally pages.unpersist(): Unit
+  }
+
+  test("a batched call that throws reruns its days one by one; only the bad day is a gap") {
+    val pages = PagesGen.generate(spark, 400, nDomains = 20, nDays = 3, seed = 23L)
+      .select("url", "warc_ts", "text")
+    val days = daysOf(pages)
+    val bad = days(1)
+    // the day-count aggregate reads only url and warc_ts: only the pipeline throws
+    val poisoned = pages.withColumn("text",
+      when(Fns.dayKey(col("warc_ts")) === bad, raise_error(lit("poisoned text")))
+        .otherwise(col("text")))
+    val h = Checkpoint.configHash(DedupConfig())
+    val root = freshRoot()
+    assert(Checkpoint.runIncremental(spark, poisoned, root) == days.filterNot(_ == bad))
+    assert(Checkpoint.completedDays(spark, root, h) == days.toSet - bad)
+    assert(Checkpoint.openGapDays(spark, root, h) == Seq(bad))
+    // a resume retries only that day, and the root ends as a clean drain's
+    assert(Checkpoint.runIncremental(spark, pages, root) == Seq(bad))
+    val clean = freshRoot()
+    assert(Checkpoint.runIncremental(spark, pages, clean) == days)
+    assert(rowsOf(spark.read.parquet(s"$root/output")) == rowsOf(spark.read.parquet(s"$clean/output")))
+  }
+
+  test("drain batches hold the doc bound, keep drain order, and isolate oversized days") {
+    val days = Seq("gap" -> 5L, "a" -> 3L, "b" -> 4L, "big" -> 20L, "c" -> 1L, "d" -> 9L)
+    val bs = Checkpoint.batches(days, 10L)
+    assert(bs == Seq(Seq("gap", "a"), Seq("b"), Seq("big"), Seq("c", "d")))
+    assert(bs.flatten == days.map(_._1))
+    bs.filter(_.size > 1).foreach(b => assert(b.map(days.toMap).sum <= 10L, b))
+    assert(Checkpoint.batches(Nil, 10L).isEmpty)
+    assert(Checkpoint.batches(Seq("x" -> 10L), 10L) == Seq(Seq("x")))
+    assert(Checkpoint.splitByShare(10L, Seq(1L, 1L, 1L)) == Seq(3L, 3L, 4L))
+    assert(Checkpoint.splitByShare(7L, Seq(5L)) == Seq(7L))
   }
 
   test("multimodal stub pipeline: schema, determinism, batch shape") {
