@@ -95,7 +95,8 @@ object Probe {
     // what crosses the pair-dedup exchange at a given gate. Count per
     // hamming bucket once and derive every gate's cost from the histogram,
     // for both the 64-bit and the 128-bit hamming.
-    val rawPairs = DedupPipeline.candidatesRaw(sigs, cfg, emitHamming128 = true)
+    val rawPairs = DedupPipeline.candidatesRaw(DedupPipeline.withBands(sigs, cfg), cfg,
+      emitHamming128 = true)
       .persist(StorageLevel.DISK_ONLY)
     def cumHist(name: String, colName: String): Unit = {
       val hist = rawPairs.groupBy(col(colName)).agg(count(lit(1)).as("n"))

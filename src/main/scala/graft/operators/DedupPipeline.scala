@@ -175,20 +175,27 @@ object DedupPipeline {
     * uid, simhash and simhash2 feed the bucket rows and the gates; `bands`,
     * the `cfg.bands` LSH band hashes, stands in for the `numHashes`-long
     * MinHash (a quarter of its bytes at the defaults); svec feeds the verify
-    * join. The text rides along only for the LCS layer, and the day only in
-    * a day-keyed call, where it is part of the uid and of the bucket key.
+    * join. The text rides along only for the LCS layer, and the `dayKey`
+    * column only in a day-keyed call, where it is part of the uid and of the
+    * bucket key.
     */
   private def signatureCache(reps: DataFrame, cfg: DedupConfig,
-                             day: Seq[Column]): DataFrame = {
+                             dayKey: Seq[String]): DataFrame = {
     val cols = Seq(
-      uidOf(col("url"), day).as("uid"),
+      uidOf(col("url"), dayKey.map(col)).as("uid"),
       col("sig.simhash").as("simhash"),
       col("sig.simhash2").as("simhash2"),
       Fns.lshBucketsUdf(cfg.bands)(col("sig.minhash")).as("bands"),
       col("sig.svec").as("svec")) ++
-      (if (cfg.lcsMinRatio > 0) Seq(col("text")) else Nil) ++ day
+      (if (cfg.lcsMinRatio > 0) Seq(col("text")) else Nil) ++ dayKey.map(col)
     withKernel(reps, cfg).select(cols: _*)
   }
+
+  /** [[signatures]] plus `bands`, the `cfg.bands` LSH band hashes of its
+    * `minhash` (null where the MinHash is): the input [[candidatesRaw]]
+    * reads. */
+  private[graft] def withBands(sigs: DataFrame, cfg: DedupConfig): DataFrame =
+    sigs.withColumn("bands", Fns.lshBucketsUdf(cfg.bands)(col("minhash")))
 
   /** Candidate pairs from LSH banding: (uid_a, uid_b, simhash_hamming) with
     * uid_a < uid_b, deduplicated across bands. The 8-byte SimHash rides
@@ -210,9 +217,10 @@ object DedupPipeline {
     * at 600k docs).
     */
   def candidates(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    candidatesRaw(sigs, cfg)
-      .repartition(col("uid_a"))
-      .dropDuplicates("uid_a", "uid_b")
+    distinctPairs(candidatesRaw(withBands(sigs, cfg), cfg))
+
+  private def distinctPairs(raw: DataFrame): DataFrame =
+    raw.repartition(col("uid_a")).dropDuplicates("uid_a", "uid_b")
 
   /** The band-join pair stream BEFORE cross-band deduplication: one row per
     * (band, bucket) co-occurrence of a pair, hamming-gated. This is exactly
@@ -231,23 +239,22 @@ object DedupPipeline {
     * (~50 B/bucket-row) are freed by the ContextCleaner once the run's
     * frames go out of scope.
     *
-    * `sigs` is either [[signatures]] (band hashes derived from `minhash`
-    * here) or the pipeline's own cache, which carries them as `bands`. When
-    * it carries a `day`, the bucket key is (day, band, bucket): the df-cap
-    * counts and the join pair docs of one day only.
+    * `sigs` carries uid, simhash, simhash2 and `bands` (a row whose `bands`
+    * is null has no bucket rows): the pipeline's own signature cache, or
+    * [[withBands]] of [[signatures]]. `dayKey` names the day column of a
+    * day-keyed call; the bucket key is then (day, band, bucket), so the
+    * df-cap counts and the join pairs docs of one day only.
     */
   private[graft] def candidatesRaw(sigs: DataFrame, cfg: DedupConfig,
-                                   emitHamming128: Boolean = false): DataFrame = {
+                                   emitHamming128: Boolean = false,
+                                   dayKey: Seq[String] = Nil): DataFrame = {
     val gate128 = cfg.simhash128PregateMaxHamming >= 0
-    val cached = sigs.columns.contains("bands")
-    val dayKey = sigs.columns.filter(_ == "day").toSeq
     val key = dayKey ++ Seq("band", "bucket")
     val bucketCols = Seq(col("uid"), col("simhash")) ++
       (if (gate128 || emitHamming128) Seq(col("simhash2")) else Nil) ++ dayKey.map(col) ++
-      Seq(posexplode(if (cached) col("bands") else Fns.lshBucketsUdf(cfg.bands)(col("minhash"))))
+      Seq(posexplode(col("bands")))
     sigs.sparkSession.sparkContext.setJobDescription("dedup: bucket checkpoint")
     val buckets0 = sigs
-      .filter(col(if (cached) "bands" else "minhash").isNotNull)
       .select(bucketCols: _*)
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
       .repartition(key.map(col): _*)
@@ -373,7 +380,6 @@ object DedupPipeline {
     val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
     // the day as days since the epoch: an int key, one-to-one with Fns.dayKey
     val dayKey = if (byDay) Seq("day") else Nil
-    val day = dayKey.map(col)
     val projected = pages.select(Seq(col("url"), col("warc_ts"), col("text")) ++
       (if (byDay) Seq(unix_date(to_date(Fns.dayKey(col("warc_ts")))).as("day")) else Nil): _*)
 
@@ -415,7 +421,7 @@ object DedupPipeline {
     // (url, warc_ts, n_chars, rep_uid, exact_grp_n) for every input row
     val members = keyed.drop("text").join(dupGroups, exactKey, "left")
       .select(col("url"), col("warc_ts"), col("n_chars"),
-        uidOf(coalesce(col("rep_url"), col("url")), day).as("rep_uid"),
+        uidOf(coalesce(col("rep_url"), col("url")), dayKey.map(col)).as("rep_uid"),
         coalesce(col("grp_n"), lit(1L)).as("exact_grp_n"))
 
     // `members` does not depend on stages 1-4, but left lazy it is
@@ -454,7 +460,7 @@ object DedupPipeline {
     var sigs: DataFrame = null
     try {
       val out = runStages(spark, cfg, keyedRead, membersPart, membersFut,
-        s => sigs = s, reps, day)
+        s => sigs = s, reps, dayKey)
       done = true
       out
     } finally {
@@ -479,7 +485,7 @@ object DedupPipeline {
                         membersFut: java.util.concurrent.Future[Long],
                         onSigs: DataFrame => Unit,
                         reps: DataFrame,
-                        day: Seq[Column]): DataFrame = {
+                        dayKey: Seq[String]): DataFrame = {
     // ---- stages 1-4 over representatives ------------------------------
     // Multi-consumer caches must be FULLY materialized before any job fans
     // out over them: consumers' stages otherwise run concurrently inside
@@ -507,9 +513,9 @@ object DedupPipeline {
     // job's scan fills the cache for the verify join's two later reads. A
     // sigs.count() would be one full extra pass over the corpus-scale cache
     // plus a serial barrier (fixed cost F).
-    val sigs = signatureCache(reps, cfg, day).persist(bigCacheLevel)
+    val sigs = signatureCache(reps, cfg, dayKey).persist(bigCacheLevel)
     onSigs(sigs)
-    val cand = candidates(sigs, cfg)
+    val cand = distinctPairs(candidatesRaw(sigs, cfg, dayKey = dayKey))
     keyedRead() // the bucket checkpoint filled sigs
     // Edge list materialized once by an eager localCheckpoint, in a job of
     // its own, so the verify join's work is not charged to CC's collect.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
 import graft.operators.{DedupConfig, DedupPipeline}
+import scala.util.control.NonFatal
 
 /** Per-partition checkpointed, idempotently-resumable pipeline runs with
   * lineage + metrics tables.
@@ -387,6 +388,87 @@ object Checkpoint {
   def releaseDayLease(root: String, cfgHash: String, day: String, runId: String): Unit =
     LeaseFile.release(dayLeasePath(root, cfgHash, day), runId)
 
+  /** Push the heartbeat of `runId`'s lease on `day` to `nowMs`; false iff
+    * `runId` no longer holds it (taken over, or moved aside by a reaper).
+    */
+  private def refreshDayLease(root: String, cfgHash: String, day: String, runId: String,
+                              nowMs: Long): Boolean = {
+    val p = dayLeasePath(root, cfgHash, day)
+    LeaseFile.read(p).flatMap(LeaseFile.parse).filter(_.runId == runId)
+      .exists(i => LeaseFile.refresh(p, runId, s"$runId|${i.acquiredAtMs}|$nowMs"))
+  }
+
+  /** Keeps a drain's run lock and its in-flight day leases fresh while its
+    * pipeline calls run. A batched call may run far longer than one day's
+    * call, so the heartbeat between calls alone could let a TTL sized for
+    * one day lapse mid-call and a second worker take the same days. A
+    * daemon thread refreshes them every third of the shortest TTL.
+    *
+    * A day lease this run lost is dropped from the days it may commit
+    * ([[check]]). A lost run lock marks the run dispossessed: the keeper
+    * cancels the drain's Spark jobs (job group `jobGroup`) and [[check]]
+    * throws, so the run stops at once rather than at the end of its call.
+    */
+  private final class LeaseKeeper(spark: SparkSession, root: String, cfgHash: String,
+                                  runId: String, workerId: String, jobGroup: String,
+                                  lockTtlMs: Long, dayLeaseTtlMs: Long) {
+    private val held = scala.collection.mutable.Set.empty[String]
+    private val lost = scala.collection.mutable.Set.empty[String]
+    @volatile private var dispossession: Option[Exception] = None
+    private var closed = false
+    private val timer = Seq(lockTtlMs, dayLeaseTtlMs).filter(_ > 0).minOption.map { ttl =>
+      val t = java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
+        val th = new Thread(r, s"lease-keeper-$workerId"); th.setDaemon(true); th
+      }
+      val every = math.max(1L, ttl / 3)
+      // a tick that throws would cancel every later tick: the next one retries
+      t.scheduleWithFixedDelay(() => try refresh() catch { case NonFatal(_) => }, every, every,
+        java.util.concurrent.TimeUnit.MILLISECONDS)
+      t
+    }
+
+    /** `day`'s lease, just taken by this run, is kept fresh from now on. */
+    def hold(day: String): Unit = synchronized { held += day }
+
+    /** `days` committed: their leases stay as done-markers, unrefreshed. */
+    def done(days: Seq[String]): Unit = synchronized { held --= days }
+
+    /** Give `day`'s lease up, so another worker may retry the day. */
+    def release(day: String): Unit = synchronized {
+      held -= day
+      releaseDayLease(root, cfgHash, day, workerId)
+    }
+
+    private def refresh(): Unit = synchronized {
+      if (!closed) {
+        val now = System.currentTimeMillis()
+        if (runId.nonEmpty && dispossession.isEmpty)
+          try heartbeat(root, cfgHash, runId, now) catch {
+            case e: IllegalStateException =>
+              dispossession = Some(e)
+              spark.sparkContext.cancelJobGroup(jobGroup)
+          }
+        held.toSeq.filterNot(refreshDayLease(root, cfgHash, _, workerId, now)).foreach { d =>
+          held -= d
+          lost += d
+        }
+      }
+    }
+
+    /** Refresh now; throws if the run lock was lost, else returns the days
+      * of `days` whose leases this run still holds. */
+    def check(days: Seq[String]): Seq[String] = synchronized {
+      refresh()
+      dispossession.foreach(e => throw e)
+      days.filterNot(lost)
+    }
+
+    def close(): Unit = synchronized {
+      closed = true
+      timer.foreach(_.shutdownNow())
+    }
+  }
+
   // ------------------------------------------------------------------
   // Gap / retry ledger (reference `fetch_service.py:43-62` seeds each run
   // with open gaps first; `repository.py:371-404` records gaps with
@@ -477,10 +559,11 @@ object Checkpoint {
   }
 
   /** Input docs per pipeline call of a sequential drain. Consecutive days
-    * share a call up to this bound and a day is never split, so at
-    * production day sizes each day is still its own call: the driver-side
-    * CC envelope (~32 M edges per call, SCALE.md) and the per-call scratch
-    * are those of one day.
+    * share a call up to this bound and a day is never split, so a call's
+    * driver-side CC envelope and its scratch are those of at most 1 M docs
+    * (or of one larger day). One call has been measured from 600 k to 5 M
+    * docs (SCALE.md): the shuffle constant stays ~27 KB/doc, and 1 M docs
+    * give ~1 M verified edges, far inside the ~32 M-edge CC envelope.
     */
   private val BatchDocs = 1000000L
 
@@ -502,6 +585,11 @@ object Checkpoint {
     bounds.zip(bounds.tail).map { case (a, b) => b - a }
   }
 
+  /** Local property that names, comma-separated, the days of the pipeline
+    * call each job of a drain belongs to. Unlike the job description, which
+    * the pipeline's stages relabel, it is on every job of the call. */
+  private[graft] val CallDaysProperty = "graft.checkpoint.days"
+
   /** Doc count and order-insensitive fingerprint of the input keys
     * (bit_xor, not sum — overflow-free under ANSI mode).
     */
@@ -513,22 +601,25 @@ object Checkpoint {
     * Ordering: retry-eligible gap days first (oldest first), then fresh
     * days — the reference's backfill-before-fresh drain order.
     *
-    * A sequential drain sends its days through [[DedupPipeline.runDays]],
-    * consecutive days batched up to [[BatchDocs]] input docs per call, and
-    * commits each batch with one partitioned output write, one `metrics`
+    * Every pipeline call is one [[DedupPipeline.runDays]] over one or more
+    * days, committed with one partitioned output write, one `metrics`
     * append and, last, one `checkpoints` append. Each `output/day=<d>` holds
     * exactly the rows a per-day [[DedupPipeline.run]] gives; a day's
-    * `elapsedMs` is its input share of the batch's time. If a batched call
-    * throws, its days rerun one by one, so a bad day still costs one day.
+    * `elapsedMs` is its input share of its call's time. A sequential drain
+    * batches consecutive fresh days up to [[BatchDocs]] input docs per call.
+    * Gap days (they failed before) and `failDays` run one call each, so a
+    * day that fails again costs one day's call. If a batched call throws,
+    * its days rerun one call each.
     *
     * `lockTtlMs > 0` enables the single-writer lock with that staleness
     * TTL. `failAfter` injects a hard crash after N partitions (kill/rerun
     * fixture — no gap row, lock left dangling, exactly like a real crash).
     * `failDays` injects a per-day processing failure that exercises the
     * soft path: gap row recorded, remaining days continue. A day lease is
-    * taken right before the call that runs its day; with batching, that
-    * call may run up to [[BatchDocs]] docs, so `dayLeaseTtlMs` must cover it.
-    * `maxParallelDays > 1` runs one pipeline call per day, from a pool.
+    * taken right before the call that runs its day. The lock and the
+    * leases of the days in flight are refreshed every third of their TTL
+    * while the calls run ([[LeaseKeeper]]), so a TTL need not cover a call.
+    * `maxParallelDays > 1` runs one call per day, from a pool.
     *
     * `failAfter` and `maxParallelDays > 1` are mutually exclusive BY
     * DESIGN, not by implementation accident: "crash after exactly N
@@ -552,19 +643,25 @@ object Checkpoint {
       "failAfter crash injection is defined for sequential drains only")
     val cfgHash = configHash(cfg)
     val sc = spark.sparkContext
-    // a call's jobs are labelled `checkpoint: <day>[,<day>...]`; the
-    // caller's label is restored on exit (the sequential drain runs on the
-    // caller's thread)
+    // a call's jobs are labelled `checkpoint: <day>[,<day>...]` and run in
+    // the drain's job group (threads started later inherit it); the
+    // caller's label and group are restored on exit (the sequential drain
+    // runs on the caller's thread)
     val callerDescription = sc.getLocalProperty("spark.job.description")
+    val callerGroup = sc.getLocalProperty("spark.jobGroup.id")
     val runId =
       if (lockTtlMs > 0) acquireLock(spark, root, cfgHash, lockTtlMs) else ""
     // day-lease workers need an identity even without the global lock
     val workerId = if (runId.nonEmpty) runId else java.util.UUID.randomUUID().toString
+    val jobGroup = s"checkpoint-$workerId"
+    sc.setLocalProperty("spark.jobGroup.id", jobGroup)
+    val keeper = new LeaseKeeper(spark, root, cfgHash, runId, workerId, jobGroup,
+      lockTtlMs, dayLeaseTtlMs)
 
     try {
       val withDay = pages.withColumn("day", Fns.dayKey(col("warc_ts")))
       // every day's input stats in one job: they size the batches and fill
-      // the batched days' metrics rows
+      // the days' metrics rows
       val dayIn = withDay.groupBy(col("day")).agg(inputStats.head, inputStats.tail: _*)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       val allDays = dayIn.keys.toSeq.sorted
@@ -584,97 +681,91 @@ object Checkpoint {
       // would otherwise re-lease and re-process the day). A kept lease past
       // its TTL is inert — the COMPLETED checkpoint row excludes the day
       // from every future todo.
-      def lease(day: String): Boolean = dayLeaseTtlMs <= 0 ||
-        tryAcquireDayLease(root, cfgHash, day, workerId, dayLeaseTtlMs)
+      def lease(day: String): Boolean = dayLeaseTtlMs <= 0 || {
+        val ok = tryAcquireDayLease(root, cfgHash, day, workerId, dayLeaseTtlMs)
+        if (ok) keeper.hold(day)
+        ok
+      }
 
       // soft failure: ledger the day with a retry-after and continue;
       // release the lease so another worker may retry the day
       def fail(day: String, e: Exception): Unit = {
         recordGap(spark, root, day, cfgHash, e.getMessage,
           System.currentTimeMillis() + retryBackoffMs)
-        if (dayLeaseTtlMs > 0) releaseDayLease(root, cfgHash, day, workerId)
+        if (dayLeaseTtlMs > 0) keeper.release(day)
       }
 
-      // metrics rows, then the checkpoint rows LAST — the commit point of
-      // their days. Thread-safe: atomicAppend writes unique scratch dirs.
-      def commit(rows: Seq[RunMetrics]): Unit = {
-        import spark.implicits._
-        atomicAppend(rows.toDF(), root, "metrics")
-        val at = System.currentTimeMillis()
-        atomicAppend(rows.map(m => (m.day, cfgHash, "COMPLETED", at))
-          .toDF("day", "configHash", "status", "committedAtMs"), root, "checkpoints")
-      }
-
-      // one leased day through DedupPipeline.run: process -> output ->
-      // metrics -> checkpoint row. True iff the day COMPLETED. Every Spark
-      // job here is independent, so N days can run concurrently.
-      def runDay(day: String): Boolean = {
-        val t0 = System.currentTimeMillis()
-        sc.setJobDescription(s"checkpoint: $day")
-        try {
-          if (failDays.contains(day))
-            throw new RuntimeException(s"injected day failure for $day")
-          val dayPages = withDay.filter(col("day") === day).drop("day")
-          val in = dayPages.agg(inputStats.head, inputStats.tail: _*).first()
-          val clusters = DedupPipeline.run(spark, dayPages, cfg)
-          // cluster_id is a sha1, never null, so countDistinct counts every cluster
-          val out = clusters.agg(count(lit(1)), countDistinct(col("cluster_id"))).first()
-          val (nClustered, nClusters) = (out.getLong(0), out.getLong(1))
-          clusters.write.mode(SaveMode.Overwrite).parquet(s"$root/output/day=$day")
-          commit(Seq(RunMetrics(day, cfgHash, in.getLong(0), nClustered, nClusters,
-            nClustered - nClusters, System.currentTimeMillis() - t0, in.getLong(1),
-            "COMPLETED", t0)))
-          true
-        } catch { case e: Exception => fail(day, e); false }
-      }
-
-      // leased days through one DedupPipeline.runDays call; returns the
-      // days that COMPLETED
+      // leased days through one DedupPipeline.runDays call: output ->
+      // metrics -> checkpoint rows LAST, the commit point of their days.
+      // Returns the days that COMPLETED. Every Spark job here is
+      // independent, so calls can run concurrently: atomicAppend and the
+      // dynamic-overwrite write each stage in a directory of their own.
       def runBatch(days: Seq[String]): Seq[String] = {
         val t0 = System.currentTimeMillis()
         sc.setJobDescription(s"checkpoint: ${days.mkString(",")}")
+        sc.setLocalProperty(CallDaysProperty, days.mkString(","))
         try {
+          days.find(failDays).foreach(d => throw new RuntimeException(s"injected day failure for $d"))
           val clusters = DedupPipeline.runDays(spark,
             withDay.filter(col("day").isin(days: _*)).drop("day"), cfg)
           val day = Fns.dayKey(col("warc_ts"))
+          // cluster_id is a sha1, never null, so countDistinct counts every cluster
           val out = clusters.groupBy(day)
             .agg(count(lit(1)), countDistinct(col("cluster_id")))
             .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-          // dynamic overwrite replaces exactly the days written, as the
+          // only days whose leases this run still holds are written
+          val mine = keeper.check(days)
+          val written = if (mine == days) clusters else clusters.filter(day.isin(mine: _*))
+          // dynamic overwrite replaces exactly the days written, as a
           // per-day overwrite does; a day without clusters gets an empty one
-          clusters.withColumn("day", day).write.mode(SaveMode.Overwrite)
+          written.withColumn("day", day).write.mode(SaveMode.Overwrite)
             .option("partitionOverwriteMode", "dynamic").partitionBy("day")
             .parquet(s"$root/output")
-          days.filterNot(out.contains).foreach { d =>
+          mine.filterNot(out.contains).foreach { d =>
             clusters.limit(0).write.mode(SaveMode.Overwrite).parquet(s"$root/output/day=$d")
           }
           val elapsed = splitByShare(System.currentTimeMillis() - t0, days.map(dayIn(_)._1))
-          commit(days.zip(elapsed).map { case (d, ms) =>
+          val rows = days.zip(elapsed).filter(x => mine.contains(x._1)).map { case (d, ms) =>
             val ((nIn, fp), (nClustered, nClusters)) = (dayIn(d), out.getOrElse(d, (0L, 0L)))
             RunMetrics(d, cfgHash, nIn, nClustered, nClusters, nClustered - nClusters, ms, fp,
               "COMPLETED", t0)
-          })
-          days
-        } catch { case _: Exception => days.filter(runDay) }
+          }
+          if (rows.nonEmpty) {
+            import spark.implicits._
+            atomicAppend(rows.toDF(), root, "metrics")
+            val at = System.currentTimeMillis()
+            atomicAppend(rows.map(m => (m.day, cfgHash, "COMPLETED", at))
+              .toDF("day", "configHash", "status", "committedAtMs"), root, "checkpoints")
+          }
+          keeper.done(mine)
+          mine
+        } catch {
+          case e: Exception =>
+            // a dispossessed run stops here; a day whose lease was taken
+            // over is left to its new owner
+            val mine = keeper.check(days)
+            if (days.size > 1) mine.flatMap(d => runBatch(Seq(d)))
+            else { mine.foreach(fail(_, e)); Nil }
+        }
       }
 
-      def heartbeatIfLocked(): Unit = if (runId.nonEmpty) heartbeat(root, cfgHash, runId)
+      // each call ends with a synchronous heartbeat: a dispossessed run
+      // throws here
+      def run(days: Seq[String]): Seq[String] = {
+        val leased = days.filter(lease)
+        val ok = if (leased.isEmpty) Nil else runBatch(leased)
+        keeper.check(Nil)
+        ok
+      }
 
       val out: Seq[String] =
         if (maxParallelDays <= 1) {
           // sequential drain (gap days first — the reference's order); the
           // crash injection lets the plan's first `failAfter` days drain
           val (now, later) = todo.splitAt(failAfter)
-          // injected failures get their gap rows before the batched calls
-          now.filter(failDays).foreach(d => if (lease(d)) runDay(d))
-          heartbeatIfLocked()
-          val completed = batches(now.filterNot(failDays).map(d => d -> dayIn(d)._1), BatchDocs)
-            .flatMap { batch =>
-              val leased = batch.filter(lease)
-              val ok = if (leased.isEmpty) Nil else runBatch(leased)
-              heartbeatIfLocked()
-              ok
-            }
+          val (single, batched) = now.partition(d => gapDays.contains(d) || failDays(d))
+          val completed = (single.map(Seq(_)) ++
+            batches(batched.map(d => d -> dayIn(d)._1), BatchDocs)).flatMap(run)
           if (later.nonEmpty)
             throw new RuntimeException(s"injected failure before partition ${later.head}")
           completed
@@ -690,25 +781,27 @@ object Checkpoint {
           try {
             val futures = todo.map { day =>
               day -> pool.submit(new java.util.concurrent.Callable[Boolean] {
-                def call(): Boolean = {
-                  val ok = lease(day) && runDay(day)
-                  heartbeatIfLocked()
-                  ok
-                }
+                def call(): Boolean = run(Seq(day)).nonEmpty
               })
             }
             futures.filter(_._2.get()).map(_._1)
           } finally { pool.shutdown(): Unit }
         }
+      keeper.close()
       if (runId.nonEmpty) releaseLock(spark, root, cfgHash, runId)
       out
     } catch {
       case e: Throwable =>
         // hard abort: mark FAILED if we still hold the lock, then rethrow.
         // (A real kill -9 skips this — that's what the stale TTL reaps.)
+        keeper.close()
         if (runId.nonEmpty)
           releaseLock(spark, root, cfgHash, runId, "FAILED", String.valueOf(e.getMessage))
         throw e
-    } finally sc.setJobDescription(callerDescription)
+    } finally {
+      sc.setJobDescription(callerDescription)
+      sc.setLocalProperty("spark.jobGroup.id", callerGroup)
+      sc.setLocalProperty(CallDaysProperty, null)
+    }
   }
 }

@@ -162,6 +162,35 @@ class RuntimeSpec extends AnyFunSuite {
     } finally pages.unpersist(): Unit
   }
 
+  /** The days of each pipeline call `body` makes, one entry per call, in
+    * start order: every job of a call carries them in
+    * [[Checkpoint.CallDaysProperty]]. */
+  private def callsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        p.flatMap(q => Option(q.getProperty(Checkpoint.CallDaysProperty)))
+          .foreach(ds => if (!calls.contains(ds)) calls.add(ds))
+        if (p.exists(_.getProperty("spark.job.description") == "calls: marker")) marker.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every job of `body` has been recorded
+      sc.setJobDescription("calls: marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    calls.toArray(Array.empty[String]).toSeq
+  }
+
   test("a batched call that throws reruns its days one by one; only the bad day is a gap") {
     val pages = PagesGen.generate(spark, 400, nDomains = 20, nDays = 3, seed = 23L)
       .select("url", "warc_ts", "text")
@@ -173,20 +202,81 @@ class RuntimeSpec extends AnyFunSuite {
         .otherwise(col("text")))
     val h = Checkpoint.configHash(DedupConfig())
     val root = freshRoot()
-    assert(Checkpoint.runIncremental(spark, poisoned, root) == days.filterNot(_ == bad))
-    assert(Checkpoint.completedDays(spark, root, h) == days.toSet - bad)
+    // the first two days: one batched call, which throws, then one call each
+    var done: Seq[String] = Nil
+    val first = callsOf {
+      done = Checkpoint.runIncremental(spark, onDay(poisoned, days(0)).union(onDay(poisoned, bad)), root)
+    }
+    assert(done == Seq(days(0)))
+    assert(first == Seq(s"${days(0)},$bad", days(0), bad), first)
+    assert(Checkpoint.completedDays(spark, root, h) == Set(days(0)))
     assert(Checkpoint.openGapDays(spark, root, h) == Seq(bad))
-    // a resume retries only that day, and the root ends as a clean drain's
+    // a resume runs the open gap day in a call of its own, before and
+    // apart from the fresh day's batch: failing again costs one day's call
+    val resume = callsOf { done = Checkpoint.runIncremental(spark, poisoned, root) }
+    assert(done == Seq(days(2)))
+    assert(resume == Seq(bad, days(2)), resume)
+    assert(Checkpoint.openGapDays(spark, root, h) == Seq(bad))
+    // once the day is mended, a resume retries only it, and the root ends
+    // as a clean drain's
     assert(Checkpoint.runIncremental(spark, pages, root) == Seq(bad))
     val clean = freshRoot()
     assert(Checkpoint.runIncremental(spark, pages, clean) == days)
     assert(rowsOf(spark.read.parquet(s"$root/output")) == rowsOf(spark.read.parquet(s"$clean/output")))
   }
 
+  test("a drain keeps its lock and day leases fresh while a call outlasts their TTL") {
+    val pages = PagesGen.generate(spark, 300, nDomains = 15, nDays = 2, seed = 29L)
+      .select("url", "warc_ts", "text")
+    val days = daysOf(pages)
+    val h = Checkpoint.configHash(DedupConfig())
+    val root = freshRoot()
+    val ttl = 1000L
+    // the first worker's call waits on the gate inside its pipeline; the
+    // day-count aggregate before it reads no text, so it runs through
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    CallGate.latch = gate
+    CallGate.deadlineMs = System.currentTimeMillis() + 60000L
+    val held = pages.withColumn("text", CallGate.pass(col("text")))
+    var first: Either[Throwable, Seq[String]] = Right(Nil)
+    val worker = new Thread(() => first =
+      try Right(Checkpoint.runIncremental(spark, held, root, lockTtlMs = ttl, dayLeaseTtlMs = ttl))
+      catch { case e: Throwable => Left(e) })
+    worker.start()
+    try {
+      val leases = days.map(d => java.nio.file.Paths.get(root, "locks", "days", h, s"$d.lease"))
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!leases.forall(java.nio.file.Files.exists(_)) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(leases.forall(java.nio.file.Files.exists(_)), "the first worker took no leases")
+      // three TTLs into the call, only the keeper's refreshes keep the lock
+      // and the leases fresh: a second worker can take neither. (Its checks
+      // are the lock and lease takes a drain makes; its own Spark jobs
+      // would queue behind the gated tasks.)
+      Thread.sleep(3 * ttl)
+      assert(worker.isAlive)
+      val e = intercept[IllegalStateException] {
+        Checkpoint.acquireLock(spark, root, h, staleTtlMs = ttl)
+      }
+      assert(e.getMessage.contains("already active"), e.getMessage)
+      days.foreach(d =>
+        assert(!Checkpoint.tryAcquireDayLease(root, h, d, "second-worker", staleTtlMs = ttl), d))
+    } finally {
+      gate.countDown()
+      worker.join(120000L)
+    }
+    assert(first == Right(days))
+    // each day processed and committed exactly once
+    def daysIn(table: String) =
+      spark.read.parquet(s"$root/$table").select("day").collect().map(_.getString(0)).sorted.toSeq
+    assert(daysIn("checkpoints") == days)
+    assert(daysIn("metrics") == days)
+  }
+
   test("drain batches hold the doc bound, keep drain order, and isolate oversized days") {
-    val days = Seq("gap" -> 5L, "a" -> 3L, "b" -> 4L, "big" -> 20L, "c" -> 1L, "d" -> 9L)
+    val days = Seq("e" -> 5L, "a" -> 3L, "b" -> 4L, "big" -> 20L, "c" -> 1L, "d" -> 9L)
     val bs = Checkpoint.batches(days, 10L)
-    assert(bs == Seq(Seq("gap", "a"), Seq("b"), Seq("big"), Seq("c", "d")))
+    assert(bs == Seq(Seq("e", "a"), Seq("b"), Seq("big"), Seq("c", "d")))
     assert(bs.flatten == days.map(_._1))
     bs.filter(_.size > 1).foreach(b => assert(b.map(days.toMap).sum <= 10L, b))
     assert(Checkpoint.batches(Nil, 10L).isEmpty)
@@ -212,5 +302,18 @@ class RuntimeSpec extends AnyFunSuite {
       if (r.getString(0) == "image") assert(r.getInt(1) > 0 && r.getInt(2) == 0)
       else assert(r.getInt(1) == 0 && r.getInt(2) >= 0)
     }
+  }
+}
+
+/** A gate the lease-keeping test holds a drain's call on: [[pass]] returns
+  * its input once `latch` is open or `deadlineMs` has passed, so a broken
+  * drain fails the test instead of hanging it. */
+object CallGate {
+  @volatile var latch = new java.util.concurrent.CountDownLatch(0)
+  @volatile var deadlineMs = 0L
+  val pass = udf { t: String =>
+    latch.await(math.max(0L, deadlineMs - System.currentTimeMillis()),
+      java.util.concurrent.TimeUnit.MILLISECONDS)
+    t
   }
 }
