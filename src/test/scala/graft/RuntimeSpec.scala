@@ -273,6 +273,51 @@ class RuntimeSpec extends AnyFunSuite {
     assert(daysIn("metrics") == days)
   }
 
+  test("a run that loses its lock mid-call has its jobs cancelled and commits nothing") {
+    val pages = PagesGen.generate(spark, 300, nDomains = 15, nDays = 2, seed = 31L)
+      .select("url", "warc_ts", "text")
+    val h = Checkpoint.configHash(DedupConfig())
+    val root = freshRoot()
+    val ttl = 1000L
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    CallGate.latch = gate
+    CallGate.deadlineMs = System.currentTimeMillis() + 60000L
+    CallGate.arrived.set(0)
+    val held = pages.withColumn("text", CallGate.pass(col("text")))
+    var first: Either[Throwable, Seq[String]] = Right(Nil)
+    val worker = new Thread(() => first =
+      try Right(Checkpoint.runIncremental(spark, held, root, lockTtlMs = ttl))
+      catch { case e: Throwable => Left(e) })
+    var thief: Thread = null
+    worker.start()
+    try {
+      val deadline = System.currentTimeMillis() + 60000L
+      while (CallGate.arrived.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(CallGate.arrived.get() > 0, "the call never reached the gate")
+      // another run takes the lock over, as if this run's had gone stale;
+      // its bookkeeping appends queue behind the gated tasks
+      thief = new Thread(() =>
+        try Checkpoint.acquireLock(spark, root, h, staleTtlMs = ttl,
+          nowMs = System.currentTimeMillis() + 10 * ttl): Unit
+        catch { case _: Throwable => })
+      thief.start()
+      // the keeper sees the new owner, cancels the call's jobs, and the
+      // run stops while its tasks are still held on the gate
+      worker.join(30000L)
+      assert(!worker.isAlive, "the dispossessed run kept working")
+    } finally {
+      gate.countDown()
+      worker.join(120000L)
+      if (thief != null) thief.join(120000L)
+    }
+    first match {
+      case Left(e: IllegalStateException) => assert(e.getMessage.contains("dispossessed"), e.getMessage)
+      case other => fail(s"expected the run to stop as dispossessed, got $other")
+    }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "checkpoints")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "output")))
+  }
+
   test("drain batches hold the doc bound, keep drain order, and isolate oversized days") {
     val days = Seq("e" -> 5L, "a" -> 3L, "b" -> 4L, "big" -> 20L, "c" -> 1L, "d" -> 9L)
     val bs = Checkpoint.batches(days, 10L)
@@ -305,13 +350,16 @@ class RuntimeSpec extends AnyFunSuite {
   }
 }
 
-/** A gate the lease-keeping test holds a drain's call on: [[pass]] returns
+/** A gate the lease-keeping tests hold a drain's call on: [[pass]] returns
   * its input once `latch` is open or `deadlineMs` has passed, so a broken
   * drain fails the test instead of hanging it. */
 object CallGate {
   @volatile var latch = new java.util.concurrent.CountDownLatch(0)
   @volatile var deadlineMs = 0L
+  /** Rows that have reached the gate. */
+  val arrived = new java.util.concurrent.atomic.AtomicInteger()
   val pass = udf { t: String =>
+    arrived.incrementAndGet()
     latch.await(math.max(0L, deadlineMs - System.currentTimeMillis()),
       java.util.concurrent.TimeUnit.MILLISECONDS)
     t
